@@ -2,719 +2,12 @@
 
 ``entry`` runs the flagship quality-filter pipeline (extract -> langid ->
 Gopher rules -> PII scrub -> keep/drop) over the sf0.001 documents table.
-``queries``/``oracle_sql`` expose the operator battery from
-language_identification_spark.queries — every entry verified against DuckDB
+``queries``/``oracle_sql`` expose the gate battery from
+language_identification_spark.registry — every entry verified against DuckDB
 by tools/check_correctness.py before shipping.
 """
 
-from __future__ import annotations
+from language_identification_spark.queries_models import entry
+from language_identification_spark.registry import oracle_sql, queries
 
-from collections.abc import Callable, Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from language_identification_spark.fixtures import training_corpus
-from language_identification_spark.oracle.langid import NgramNBModel
-from language_identification_spark.oracle.quality import QualityConfig
-from language_identification_spark.plans.pipeline import quality_filter_plan
-from language_identification_spark.queries import ORACLE_SQL, QUERIES
-from language_identification_spark.queries_textops import (
-    ORACLE_SQL_TEXTOPS,
-    QUERIES_TEXTOPS,
-)
-from language_identification_spark.queries_webmeta import (
-    ORACLE_SQL_EXT,
-    QUERIES_EXT,
-)
-
-_MODEL = None
-
-
-def _model() -> NgramNBModel:
-    global _MODEL
-    if _MODEL is None:
-        _MODEL = NgramNBModel.train(training_corpus())
-    return _MODEL
-
-
-_QCLF = None
-
-
-def _quality_clf() -> dict:
-    """The PINNED learned-quality-filter artifact (operators/qualityclf.py):
-    trained once, driver-side, on the sf0.001 curated sample (bounded —
-    500 rows — the DCLM/FineWeb-Edu architecture: the classifier is an
-    offline artifact, scoring is corpus-scale), labels from the
-    deterministic curation heuristic, integer-quantized export. Reading
-    the sample via duckdb keeps oracle_sql() Spark-free."""
-    global _QCLF
-    if _QCLF is None:
-        import duckdb
-
-        from language_identification_spark.operators.qualityclf import (
-            label_heuristic,
-            train_quality_classifier,
-        )
-
-        rows = duckdb.connect().execute(
-            "SELECT text FROM "
-            "'/root/testdata/sf0.001/documents.parquet' ORDER BY doc_id"
-        ).fetchall()
-        _QCLF = train_quality_classifier(
-            [(label_heuristic(t), t) for (t,) in rows]
-        )
-    return _QCLF
-
-
-def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filter (DCLM-style second signal next to the
-    heuristic rule battery): the pinned integer-quantized classifier scores
-    every document as a pure relational plan — explode -> broadcast vocab
-    join -> one doc_id partial agg -> literal-coefficient integer margin.
-    Zero Python, zero floats in the scoring path; the oracle replays the
-    identical integer arithmetic (operators/qualityclf.py)."""
-    from language_identification_spark.operators.qualityclf import score_plan
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return score_plan(docs, _quality_clf())
-
-
-def _q_drop_rule_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-rule drop accounting over the FLAGSHIP pipeline's output — the
-    ops dashboard a production filter publishes next to its metrics table:
-    for every drop rule, how many documents it fired on (n_hit) and how
-    many it ALONE condemned (n_sole — removing the rule would flip exactly
-    these documents to keep, since keep == zero reasons). One explode +
-    one (rule) hash aggregate over the pipeline's rows; the oracle replays
-    the entire pipeline in SQL (oracle/pipeline_sql.py) and re-derives the
-    same accounting from the '|'-joined reasons string, so the gate also
-    re-verifies the full rule chain end-to-end. Runs at the PRODUCTION
-    (Gopher-paper) thresholds — the default config drops this corpus almost
-    exclusively via too_few_stopwords, which would make the report a
-    one-row degenerate."""
-    pipe = _pipeline(spark, sf_dir, QualityConfig().production())
-    ex = pipe.select(
-        F.explode("drop_reasons").alias("rule"),
-        (F.size("drop_reasons") == 1).cast("int").alias("sole"),
-    )
-    return ex.groupBy("rule").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hit"),
-        F.sum("sole").cast("bigint").alias("n_sole"),
-    )
-
-
-def _q_quality_classifier_calibration(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Reliability table for the learned quality filter — the calibration
-    artifact an ML-ops pipeline publishes next to the confusion matrix:
-    documents bucketed by classifier-margin MAGNITUDE (signed integer-log2
-    bins: sign(margin) * bit_length(|margin|) — pure integer arithmetic,
-    cross-engine exact, no float log), with per-bin exact counts of
-    classifier-keep, rule-keep, and agreement. A calibrated filter shows
-    agreement rising with |margin|; the bin table is ~60 rows at any
-    corpus size (margins are bounded integers), so the whole artifact is
-    one (bin) hash aggregate over the classifier's scoring plan."""
-    from language_identification_spark.operators.qualityclf import score_plan
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    truth = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id",
-        (
-            F.size(
-                F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-            )
-            >= 40
-        ).alias("rule_keep"),
-    )
-    clf = score_plan(docs, _quality_clf())
-    m = F.col("margin")
-    bit_len = F.length(F.bin(F.abs(m))).cast("int")
-    bin_idx = (
-        F.when(m > 0, bit_len)
-        .when(m < 0, -bit_len)
-        .otherwise(F.lit(0))
-    )
-    j = clf.join(truth, "doc_id").select(
-        bin_idx.alias("margin_bin"),
-        (F.col("q_label") == "keep").cast("int").alias("clf_keep"),
-        F.col("rule_keep").cast("int").alias("rule_keep"),
-        ((F.col("q_label") == "keep") == F.col("rule_keep"))
-        .cast("int")
-        .alias("agree"),
-    )
-    return j.groupBy("margin_bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("clf_keep").cast("bigint").alias("n_clf_keep"),
-        F.sum("rule_keep").cast("bigint").alias("n_rule_keep"),
-        F.sum("agree").cast("bigint").alias("n_agree"),
-    )
-
-
-def _q_quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The evaluation a pipeline publishes for its learned filter (DCLM
-    reports agreement of the classifier with its curation signal): the
-    confusion matrix of the pinned classifier's keep/drop vs the curation
-    rule recomputed natively on the SCORED corpus (held-out whenever
-    sf_dir != the sf0.001 training sample). All-integer composition of the
-    quality_classifier plan with a narrow-map truth column — one
-    (q_label, rule_keep) groupBy over corpus rows."""
-    from language_identification_spark.operators.qualityclf import score_plan
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    truth = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id",
-        (
-            F.size(
-                F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-            )
-            >= 40
-        ).alias("rule_keep"),
-    )
-    clf = score_plan(docs, _quality_clf())
-    return (
-        clf.join(truth, "doc_id")
-        .groupBy("q_label", "rule_keep")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_hits").cast("bigint").alias("sum_hits"),
-        )
-    )
-
-
-def _pipeline(
-    spark: SparkSession, sf_dir: str, config: QualityConfig | None = None
-) -> DataFrame:
-    """Full pipeline over the documents table (text already extracted, so the
-    html-decode stage is skipped via text_col)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pages = docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-        F.col("text"),
-    )
-    # testdata parquet is a single split; re-spread to all cores before the
-    # UDF stages (the pipeline's own host-skew defense doubles as the scan-
-    # parallelism fix — a real 100 TB table arrives already multi-split)
-    return quality_filter_plan(
-        pages,
-        _model(),
-        config=config or QualityConfig(),
-        text_col="text",
-        repartition_to=spark.sparkContext.defaultParallelism,
-    )
-
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _pipeline(spark, "/root/testdata/sf0.001")
-
-
-FUZZY_VOCAB = [
-    "schwarzenegger", "schwartz", "sandwich", "water", "waterfall",
-    "morning", "mourning", "running", "hello", "yellow",
-]
-FUZZY_QUERIES = ["schwarzeneger", "watter", "morninng", "helo"]
-
-
-def _q_fuzzy_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7/J8 grouped-map fuzzy matcher on a fixed misspelling set: bigram
-    candidate join + Damerau-Levenshtein top-k (operators/fuzzy.py)."""
-    from language_identification_spark.operators.fuzzy import fuzzy_topk_dfs
-
-    return fuzzy_topk_dfs(spark, FUZZY_VOCAB, FUZZY_QUERIES, k=3)
-
-
-# DuckDB oracle for fuzzy_lookup: same candidate rule (shared lowercase char
-# bigram), DuckDB's built-in damerau_levenshtein, same total tie-break.
-# DuckDB's DL is the unrestricted variant vs our OSA (restricted) — they agree
-# on every candidate pair in this fixture (verified; divergence needs an edit
-# INSIDE a transposed pair, e.g. 'ca'->'abc').
-SQL_FUZZY_LOOKUP = """
-WITH vocab(word) AS (VALUES {vocab}),
-qs(query) AS (VALUES {queries}),
-vg AS (
-  SELECT DISTINCT word, substring(lower(word), i, 2) AS g
-  FROM vocab, unnest(range(1, greatest(length(word) - 1, 0) + 1)) AS t(i)
-),
-qg AS (
-  SELECT DISTINCT query, substring(lower(query), i, 2) AS g
-  FROM qs, unnest(range(1, greatest(length(query) - 1, 0) + 1)) AS t(i)
-),
-cands AS (SELECT DISTINCT query, word FROM qg JOIN vg USING (g)),
-scored AS (
-  SELECT query, word,
-         damerau_levenshtein(lower(query), lower(word))::INT AS dist
-  FROM cands
-)
-SELECT query, word, dist, rank FROM (
-  SELECT query, word, dist,
-         row_number() OVER (PARTITION BY query ORDER BY dist ASC, word ASC)::INT AS rank
-  FROM scored
-) WHERE rank <= 3
-""".format(
-    vocab=", ".join(f"('{w}')" for w in FUZZY_VOCAB),
-    queries=", ".join(f"('{q}')" for q in FUZZY_QUERIES),
-)
-
-
-def _q_emd_fuzzy_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J8: positional-EMD fuzzy matcher (ApproxWordList3 semantics,
-    dictionary_langid/datatypes.py:477-617). The general alignment-DP EMD is
-    not SQL-expressible, but its closed forms ARE for the cases this fixture
-    produces (verified: all 92 shared-gram pairs are single-occurrence):
-    equal-length lists pair sorted, a singleton against k points costs
-    (k-1) + min distance — so the oracle replays the full scoring chain
-    exactly and emits NULL (a loud gate mismatch, never silence) if a
-    DP-only case ever appears. General-EMD parity stays pinned by pytest
-    against the reference-verified row-wise oracle (tests/test_fuzzy.py)."""
-    from language_identification_spark.operators.fuzzy import emd_fuzzy_topk
-
-    vdf = spark.createDataFrame([(w,) for w in FUZZY_VOCAB], "word string")
-    qdf = spark.createDataFrame([(q,) for q in FUZZY_QUERIES], "query string")
-    return emd_fuzzy_topk(vdf, qdf, top_k=5)
-
-
-# DuckDB oracle for emd_fuzzy_lookup: padded-gram location lists per (word,
-# n), shared-gram join, closed-form EMD (see _q_emd_fuzzy_lookup), the
-# reference's per-n normalization + mean, 0.9*top-or-DL<=1 cutoff over the
-# top_k*2 prefix, final top_k. DuckDB's unrestricted damerau_levenshtein
-# agrees with the OSA variant on every fixture pair (verified, same caveat
-# as fuzzy_lookup).
-_SQL_EMD_LISTS = """
-  SELECT orig, n,
-         substring(chr(2) || orig || chr(3), i + 1, n) AS gram,
-         CASE WHEN length(orig) - n + 3 > 1
-              THEN i * 1.0 / (length(orig) - n + 2)
-              ELSE 0.0 END AS loc
-  FROM {src}, ns, unnest(range(0, greatest(length(orig) - n + 3, 0))) AS t(i)
-"""
-
-SQL_EMD_FUZZY_LOOKUP = """
-WITH vocab(orig) AS (VALUES {vocab}),
-qs(orig) AS (VALUES {queries}),
-ns(n) AS (VALUES (2), (4)),
-vg AS (
-  SELECT orig AS word, n, gram, list_sort(list(loc)) AS w_locs
-  FROM ({v_lists}) GROUP BY orig, n, gram
-),
-qg AS (
-  SELECT orig AS query, n, gram, list_sort(list(loc)) AS q_locs
-  FROM ({q_lists}) GROUP BY orig, n, gram
-),
-shared AS (
-  SELECT q.query, v.word, q.n, q.q_locs, v.w_locs,
-         len(q.q_locs) AS p, len(v.w_locs) AS w
-  FROM qg q JOIN vg v USING (n, gram)
-),
--- any DP-only case (both lists repeated AND unequal) aborts the WHOLE
--- query via error(): SUM would otherwise skip a NULL gain and silently
--- understate the score (review finding)
-dp_guard AS (
-  SELECT CASE WHEN count(*) > 0
-              THEN error('EMD DP-only case: closed forms insufficient')
-              ELSE 0 END AS ok
-  FROM shared WHERE p <> w AND least(p, w) >= 2
-),
-contrib AS (
-  SELECT query, word, n,
-    greatest(p, w) - CASE
-      WHEN p = w THEN list_sum(list_transform(range(p),
-                       k -> abs(q_locs[k + 1] - w_locs[k + 1])))
-      ELSE greatest(p, w) - 1 + CASE WHEN p = 1
-        THEN list_aggregate(list_transform(w_locs, y -> abs(q_locs[1] - y)), 'min')
-        ELSE list_aggregate(list_transform(q_locs, y -> abs(w_locs[1] - y)), 'min')
-        END
-      END AS gain
-  FROM shared, dp_guard WHERE dp_guard.ok = 0
-),
-per_n AS (
-  SELECT query, word, n, sum(gain) AS s FROM contrib GROUP BY query, word, n
-),
-normed AS (
-  SELECT query, word, n,
-         CASE WHEN length(query) - n + 3 > 0
-              THEN s / (length(query) - n + 3) ELSE 0.0 END AS s
-  FROM per_n
-),
-avgd AS (
-  SELECT query, word, sum(s) / 2.0 AS score FROM normed GROUP BY query, word
-),
-pre AS (
-  SELECT query, word, score,
-         damerau_levenshtein(query, word)::INT AS dl,
-         row_number() OVER (PARTITION BY query ORDER BY score DESC, word ASC) AS pre_rank,
-         max(score) OVER (PARTITION BY query) AS top_score
-  FROM avgd
-),
-filtered AS (
-  SELECT query, word, score, dl, pre_rank
-  FROM pre
-  WHERE pre_rank <= {k2} AND (score >= 0.9 * top_score OR dl <= 1)
-)
-SELECT query, word, score, dl, rank FROM (
-  SELECT query, word, round(score, 3) AS score, dl,
-         row_number() OVER (PARTITION BY query ORDER BY pre_rank)::INT AS rank
-  FROM filtered
-) WHERE rank <= {k}
-""".format(
-    vocab=", ".join(f"('{w}')" for w in FUZZY_VOCAB),
-    queries=", ".join(f"('{q}')" for q in FUZZY_QUERIES),
-    v_lists=_SQL_EMD_LISTS.format(src="vocab"),
-    q_lists=_SQL_EMD_LISTS.format(src="qs"),
-    k2=10,
-    k=5,
-)
-
-
-def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-media decode plumbing (mapInPandas, per-row error capture) over
-    the media table derived from the parquet documents — derived, not built
-    driver-side, precisely so the DuckDB oracle can rebuild the identical
-    table and replay the sha256 features (operators/multimodal.py)."""
-    from language_identification_spark.operators.multimodal import (
-        extract_features,
-        media_from_documents,
-    )
-
-    return extract_features(media_from_documents(spark, sf_dir))
-
-
-def _stringify_floats(col: str):
-    """array<float> -> '0.123456,...' for the gate canonicalizer (pandas
-    sort_values cannot sort list cells); shared by every media entry.
-    format_number (fixed 6-decimal), not round+cast: cast-to-string renders
-    sub-1e-3 doubles in scientific notation ('6.8E-5') where DuckDB does not."""
-    return F.array_join(
-        F.transform(
-            F.col(col), lambda x: F.format_number(x.cast("double"), 6)
-        ),
-        ",",
-    )
-
-
-def _q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling plumbing (1->N mapInPandas) over the documents-derived
-    media table; features stringified for the gate canonicalizer and fully
-    replayed by the DuckDB oracle."""
-    from language_identification_spark.operators.multimodal import (
-        media_from_documents,
-        sample_frames,
-    )
-
-    return sample_frames(
-        media_from_documents(spark, sf_dir), every_n_bytes=32
-    ).withColumn("features", _stringify_floats("features"))
-
-
-def _q_word_kn_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-level Kneser-Ney perplexity of each document under its own
-    language's LM, trained distributively on the same corpus. At order 2 the
-    whole train+score loop is SQL-expressible (oracle/kn_sql.py), so this
-    entry is fully hash-gated."""
-    from pyspark.sql.types import DoubleType
-
-    from language_identification_spark.operators.perplexity import (
-        train_word_kn_spark,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    models = train_word_kn_spark(docs.select("lang", "text"), order=2)
-    bc = spark.sparkContext.broadcast(models)
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(
-        batches: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        ms = bc.value
-        for langs, texts in batches:
-            out = []
-            for lang, text in zip(langs, texts):
-                m = ms.get(lang)
-                out.append(
-                    None if m is None or not text
-                    else round(m.perplexity(text.split()), 6)
-                )
-            yield pd.Series(out, dtype="float64")
-
-    return docs.select("doc_id", "lang", _ppl("lang", "text").alias("word_ppl"))
-
-
-def _q_word_kn_ppl_o3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORDER-3 word-KN perplexity, fully hash-gated (round-3 verdict item
-    6): the chained-CTE oracle extends one level — raw trigrams,
-    continuation bigrams/unigrams, per-order discounts, two-stage
-    interpolated backoff (oracle/kn_sql.py:SQL_WORD_KN_PPL_O3). The Spark
-    side trains the same order-3 model distributively and scores each doc
-    under its own language's LM."""
-    from pyspark.sql.types import DoubleType
-
-    from language_identification_spark.operators.perplexity import (
-        train_word_kn_spark,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    models = train_word_kn_spark(docs.select("lang", "text"), order=3)
-    bc = spark.sparkContext.broadcast(models)
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(
-        batches: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        ms = bc.value
-        for langs, texts in batches:
-            out = []
-            for lang, text in zip(langs, texts):
-                m = ms.get(lang)
-                out.append(
-                    None if m is None or not text
-                    else round(m.perplexity(text.split()), 6)
-                )
-            yield pd.Series(out, dtype="float64")
-
-    return docs.select(
-        "doc_id", "lang", _ppl("lang", "text").alias("word_ppl3")
-    )
-
-
-def _q_word_kn_ppl_o4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORDER-4 word-KN perplexity, fully hash-gated (round-5, VERDICT r4
-    #6): the chained-CTE oracle is now GENERATED for any order
-    (oracle/kn_sql.py:word_kn_ppl_sql — generating orders 2/3 reproduces
-    the hand-written oracles value-for-value, pinned by pytest). The
-    Spark side trains the same order-4 model distributively and scores
-    each doc under its own language's LM; orders 4-5 are additionally
-    bit-parity-tested against the in-memory oracle trainer
-    (tests/test_kneser_ney.py)."""
-    from pyspark.sql.types import DoubleType
-
-    from language_identification_spark.operators.perplexity import (
-        train_word_kn_spark,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    models = train_word_kn_spark(docs.select("lang", "text"), order=4)
-    bc = spark.sparkContext.broadcast(models)
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(
-        batches: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        ms = bc.value
-        for langs, texts in batches:
-            out = []
-            for lang, text in zip(langs, texts):
-                m = ms.get(lang)
-                out.append(
-                    None if m is None or not text
-                    else round(m.perplexity(text.split()), 6)
-                )
-            yield pd.Series(out, dtype="float64")
-
-    return docs.select(
-        "doc_id", "lang", _ppl("lang", "text").alias("word_ppl4")
-    )
-
-
-def _q_ensemble_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L7 ensemble cascade (oracle/langid.py:ensemble_detect_batch — the
-    reference's language_identification_test.py:30-68 chain: clean ->
-    hardcode -> unique-script pin -> NB*0.8 vs script-index fold with the
-    3/4 margin) over a deterministic multi-script mutation of the documents
-    table, so every stage fires at the gate. Fully SQL-oracled via the
-    fold's order-independent closed form (oracle/ensemble_sql.py)."""
-    from language_identification_spark.oracle.ensemble_sql import (
-        mutated_text_col,
-    )
-    from language_identification_spark.oracle.langid import ensemble_udf
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    det = ensemble_udf(spark, _model())
-    return (
-        docs.select(
-            "doc_id",
-            mutated_text_col(F.col("doc_id"), F.col("text")).alias("text"),
-        )
-        .select("doc_id", det("text").alias("d"))
-        .select(
-            "doc_id",
-            F.col("d.lang").alias("lang"),
-            F.round("d.conf", 6).alias("conf"),
-        )
-    )
-
-
-def _q_char_kn_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L8 char-level modified-KN, trained distributively at order 2 and
-    scored under each document's own language LM — the order where the full
-    train+score loop is SQL-replayable (oracle/kn_sql.py SQL_CHAR_KN_PPL),
-    upgrading the char-KN evidence from pytest-only bit-parity to a driver
-    hash gate."""
-    from language_identification_spark.operators.perplexity import (
-        ppl_udf,
-        train_kn_spark,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    models = train_kn_spark(docs.select("lang", "text"), order=2)
-    score = ppl_udf(spark, models)
-    return docs.select(
-        "doc_id",
-        "lang",
-        F.round(score(F.col("text"), F.col("lang")), 6).alias("char_ppl"),
-    )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2. Every entry has
-    an oracle_sql() pair."""
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = dict(QUERIES)
-    # the gate canonicalizes results via pandas sort_values, which cannot sort
-    # list cells — array columns are stringified for the GATE ENTRY ONLY (the
-    # real pipeline output keeps drop_reasons array<string>, plans/pipeline.py).
-    # lang_conf is rounded to 6 dp on BOTH sides: raw NB scores are ~1e4
-    # log-prob sums whose summation order differs across engines (numpy
-    # reduceat vs SQL SUM), so unrounded confs agree only to ~1e-11
-    # (oracle/pipeline_sql.py docstring).
-    def _gate_pipeline(config=None):
-        def run(spark, sf_dir):
-            return (
-                _pipeline(spark, sf_dir, config)
-                .drop("warc_ts")
-                .withColumn("drop_reasons", F.array_join("drop_reasons", "|"))
-                .withColumn("lang_conf", F.round("lang_conf", 6))
-            )
-
-        return run
-
-    out["quality_pipeline"] = _gate_pipeline()
-    # same plan + oracle at the Gopher-paper production thresholds — pins the
-    # threshold plumbing (rules re-evaluate JVM-side without touching the
-    # Python stage) through the driver's hash gate as well
-    out["quality_pipeline_production"] = _gate_pipeline(
-        QualityConfig().production()
-    )
-    out["fuzzy_lookup"] = _q_fuzzy_lookup
-    out["emd_fuzzy_lookup"] = _q_emd_fuzzy_lookup
-    out["multimodal_features"] = lambda spark, sf_dir: _q_multimodal_features(
-        spark, sf_dir
-    ).withColumn("features", _stringify_floats("features"))
-    out["media_frames"] = _q_media_frames
-    out["word_kn_ppl"] = _q_word_kn_ppl
-    out["word_kn_ppl_o3"] = _q_word_kn_ppl_o3
-    out["word_kn_ppl_o4"] = _q_word_kn_ppl_o4
-    out["char_kn_ppl"] = _q_char_kn_ppl
-    out["ensemble_langid"] = _q_ensemble_langid
-    out["quality_classifier"] = _q_quality_classifier
-    out["quality_classifier_eval"] = _q_quality_classifier_eval
-    out["quality_classifier_calibration"] = _q_quality_classifier_calibration
-    out["drop_rule_ablation"] = _q_drop_rule_ablation
-    out.update(QUERIES_EXT)
-    out.update(QUERIES_TEXTOPS)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracles for EVERY queries() entry. The flagship
-    quality_pipeline is fully oracled
-    (oracle/pipeline_sql.py: NB model inlined as a VALUES CTE,
-    tokenizer/stats replayed with RE2 classes, rules + scrub in plain SQL);
-    word_kn_ppl re-trains and re-scores the order-2 KN model entirely in SQL
-    (oracle/kn_sql.py); the multimodal entries replay sha256 features over
-    the documents-derived media table."""
-    from language_identification_spark.operators.multimodal import (
-        SQL_MEDIA_FRAMES,
-        SQL_MULTIMODAL_FEATURES,
-    )
-    from language_identification_spark.oracle.kn_sql import (
-        SQL_CHAR_KN_PPL,
-        SQL_WORD_KN_PPL,
-        SQL_WORD_KN_PPL_O3,
-        SQL_WORD_KN_PPL_O4,
-    )
-    from language_identification_spark.oracle.pipeline_sql import (
-        quality_pipeline_oracle_sql,
-    )
-
-    out = dict(ORACLE_SQL)
-    out["fuzzy_lookup"] = SQL_FUZZY_LOOKUP
-    out["quality_pipeline"] = quality_pipeline_oracle_sql(_model())
-    out["quality_pipeline_production"] = quality_pipeline_oracle_sql(
-        _model(), QualityConfig().production()
-    )
-    out["multimodal_features"] = SQL_MULTIMODAL_FEATURES
-    out["media_frames"] = SQL_MEDIA_FRAMES
-    out["word_kn_ppl"] = SQL_WORD_KN_PPL
-    out["word_kn_ppl_o3"] = SQL_WORD_KN_PPL_O3
-    out["word_kn_ppl_o4"] = SQL_WORD_KN_PPL_O4
-    out["char_kn_ppl"] = SQL_CHAR_KN_PPL
-    out["emd_fuzzy_lookup"] = SQL_EMD_FUZZY_LOOKUP
-    from language_identification_spark.oracle.ensemble_sql import (
-        ensemble_oracle_sql,
-    )
-
-    out["ensemble_langid"] = ensemble_oracle_sql(_model())
-    from language_identification_spark.operators.qualityclf import export_sql
-
-    out["quality_classifier"] = export_sql(_quality_clf())
-    out["quality_classifier_eval"] = f"""
-SELECT c.q_label, t.rule_keep,
-       count(*)::BIGINT AS n_docs,
-       sum(c.n_hits)::BIGINT AS sum_hits
-FROM ({export_sql(_quality_clf())}) c
-JOIN (
-  SELECT doc_id,
-         len(list_filter(string_split(text, ' '), w -> w <> '')) >= 40
-           AS rule_keep
-  FROM documents WHERE text IS NOT NULL
-) t USING (doc_id)
-GROUP BY 1, 2
-"""
-    out["quality_classifier_calibration"] = f"""
-SELECT margin_bin,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(clf_keep) AS BIGINT) AS n_clf_keep,
-       CAST(sum(rule_keep) AS BIGINT) AS n_rule_keep,
-       CAST(sum(agree) AS BIGINT) AS n_agree
-FROM (
-  SELECT CAST(CASE WHEN c.margin > 0 THEN length(bin(c.margin))
-                   WHEN c.margin < 0 THEN -length(bin(-c.margin))
-                   ELSE 0 END AS INT) AS margin_bin,
-         CASE WHEN c.q_label = 'keep' THEN 1 ELSE 0 END AS clf_keep,
-         CASE WHEN t.rule_keep THEN 1 ELSE 0 END AS rule_keep,
-         CASE WHEN (c.q_label = 'keep') = t.rule_keep THEN 1 ELSE 0 END
-           AS agree
-  FROM ({export_sql(_quality_clf())}) c
-  JOIN (
-    SELECT doc_id,
-           len(list_filter(string_split(text, ' '), w -> w <> '')) >= 40
-             AS rule_keep
-    FROM documents WHERE text IS NOT NULL
-  ) t USING (doc_id)
-)
-GROUP BY margin_bin
-"""
-    out["drop_rule_ablation"] = f"""
-SELECT rule,
-       CAST(count(*) AS BIGINT) AS n_hit,
-       CAST(sum(CASE WHEN sole THEN 1 ELSE 0 END) AS BIGINT) AS n_sole
-FROM (
-  SELECT unnest(string_split(drop_reasons, '|')) AS rule,
-         len(string_split(drop_reasons, '|')) = 1 AS sole
-  FROM ({quality_pipeline_oracle_sql(_model(), QualityConfig().production())}) p
-  WHERE drop_reasons <> ''
-)
-GROUP BY rule
-"""
-    out.update(ORACLE_SQL_EXT)
-    out.update(ORACLE_SQL_TEXTOPS)
-    return out
+__all__ = ["entry", "oracle_sql", "queries"]

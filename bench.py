@@ -19,14 +19,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from language_identification_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # headline set: the flagship pipeline + one representative per operator
 # family, each on its SCALE path (e.g. lsh_band_buckets is the linear-cost
-# near-dup candidate generator; the exact-quadratic jaccard_top_pairs baseline
-# stays in the battery for correctness but not in the headline — an
-# all-pairs self-join is precisely what the LSH path exists to avoid)
+# near-dup candidate generator)
 HEADLINE = [
     "quality_pipeline",
     "char_freq",
@@ -42,10 +41,6 @@ HEADLINE = [
     "embedding_near_dup",
     "dedup_clusters",
     "script_charset_join",
-    "pricing_summary",
-    "order_revenue_topk",
-    "events_hourly",
-    "events_sessionize",
     # round-3 additions (the shared-subset figure below keeps round-over-
     # round comparisons honest when the battery widens)
     "word_kn_ppl",
@@ -198,7 +193,7 @@ def bench_main() -> dict:
     # 100 TB design point this is sub-ppm amortized startup cost, so the
     # steady-state number is the honest throughput figure; BENCH/BASELINE.md
     # records methodology.
-    _run_once(spark, SF_DIR, ["pricing_summary", "quality_pipeline"])
+    _run_once(spark, SF_DIR, ["char_freq", "quality_pipeline"])
 
     times = _run_once(spark, SF_DIR, HEADLINE, reps=2)
     total = round(sum(times.values()), 3)
@@ -248,7 +243,6 @@ def _ftz_bench(spark, sf_dir: str, n_docs: int) -> dict:
 
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as e
     from language_identification_spark.fixtures import training_corpus
     from language_identification_spark.operators.fasttext_train import (
         build_production_ftz,
@@ -257,6 +251,7 @@ def _ftz_bench(spark, sf_dir: str, n_docs: int) -> dict:
     from language_identification_spark.plans.pipeline import (
         quality_filter_plan,
     )
+    from language_identification_spark.queries_models import _model, _pipeline
 
     path = os.path.join(tempfile.gettempdir(), "bench_prod_lid.ftz")
     if not os.path.exists(path):
@@ -270,7 +265,7 @@ def _ftz_bench(spark, sf_dir: str, n_docs: int) -> dict:
     )
     ft_plan = quality_filter_plan(
         pages,
-        e._model(),
+        _model(),
         config=QualityConfig(),
         text_col="text",
         repartition_to=spark.sparkContext.defaultParallelism,
@@ -283,7 +278,7 @@ def _ftz_bench(spark, sf_dir: str, n_docs: int) -> dict:
         _force(ft_plan)
         best = min(best, time.time() - t0)
 
-    nb_plan = e.queries()["quality_pipeline"](spark, sf_dir)
+    nb_plan = _pipeline(spark, sf_dir)
     ft_lid = ft_plan.select("url", F.col("lang_pred").alias("ft_lang"))
     nb_lid = nb_plan.select("url", F.col("lang_pred").alias("nb_lang"))
     agg = (
@@ -433,11 +428,11 @@ def _scaling_job(spark, sf_dir: str, replicate: int):
     ~10^6 splits; a fixed partition count larger than either core count is
     the honest proxy. The repartition is part of the measured job at BOTH
     levels (it is also the pipeline's host-skew salting step, SURVEY.md §4.2)."""
-    import __spark_entry__ as e
     from pyspark.sql import functions as F
 
     from language_identification_spark.oracle.quality import QualityConfig
     from language_identification_spark.plans.pipeline import quality_filter_plan
+    from language_identification_spark.queries_models import _model
 
     # Repartition the COMPACT input first (5000 rows, one split), THEN explode
     # the replication inside each partition — otherwise the explode runs as a
@@ -460,7 +455,7 @@ def _scaling_job(spark, sf_dir: str, replicate: int):
     )
     return quality_filter_plan(
         pages,
-        e._model(),
+        _model(),
         config=QualityConfig(),
         text_col="text",
     )

@@ -26,20 +26,13 @@ def _query_main(argv: list[str]) -> None:
     p = argparse.ArgumentParser(prog="language_identification_spark query")
     p.add_argument("name", help="query name from the battery, or 'list'")
     p.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    p.add_argument("--cores", type=int, default=8)
+    p.add_argument("--cores", type=int)
     p.add_argument("--limit", type=int, default=20, help="rows to print")
     args = p.parse_args(argv)
 
-    # the FULL battery lives in the driver-contract module (it extends
-    # queries.QUERIES with the entries defined there); fall back to the
-    # package dict when the entry module isn't on the path
-    try:
-        from __spark_entry__ import queries as _battery
+    from language_identification_spark.registry import queries
 
-        registry = _battery()
-    except ImportError:
-        from language_identification_spark.queries import QUERIES as registry
-
+    registry = queries()
     if args.name == "list":
         print(json.dumps(sorted(registry)))
         return

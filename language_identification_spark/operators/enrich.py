@@ -66,24 +66,14 @@ def enrich_udf(
         if fasttext_model_path is not None:
             from language_identification_spark.operators.lid import (
                 _load_fasttext,
+                fasttext_top1,
             )
 
             ft = _load_fasttext(fasttext_model_path)
         for series in batches:
             texts = series.tolist()
             if ft is not None:
-                # fasttext_wrapper.py:39-45 semantics: predict k=1, strip
-                # the __label__ prefix, newlines folded to spaces
-                fl, fp = ft.predict(
-                    [(t or "").replace("\n", " ") for t in texts], k=1
-                )
-                lid = [
-                    (
-                        l[0].removeprefix("__label__") if l else None,
-                        float(p[0]) if len(p) else 0.0,
-                    )
-                    for l, p in zip(fl, fp)
-                ]
+                lid = fasttext_top1(ft, texts)
             else:
                 # langid vectorized: one numpy matrix pass per Arrow batch
                 lid = m.detect_batch(texts)

@@ -27,22 +27,16 @@ from language_identification_spark.oracle.extract import extract_text
 
 @F.pandas_udf(StringType())
 def extract_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """html binary/string -> cleaned extracted text (None when empty)."""
-    for series in batches:
-        yield series.map(extract_text)
-
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "extracted_text"):
-    """Project the extraction chain onto ``df``.
+    """html binary/string -> cleaned extracted text (None when empty).
 
     The 10 MiB byte cap (BYTE_LENGTH_LIMIT) is enforced INSIDE the UDF,
     immediately after decode and before the regex stages (oracle/extract.py:
     extract_text) — a native pre-UDF binary truncation would cut at a byte
     boundary and break the byte-identical-extraction invariant on pages near
-    the limit. Column pruning still reaches the scan: only ``html_col``
-    enters the Python worker.
+    the limit.
     """
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
+    for series in batches:
+        yield series.map(extract_text)
 
 
 def clean_text_expr(col: Column) -> Column:

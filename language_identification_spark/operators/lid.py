@@ -9,12 +9,12 @@ heavy part (ngram counting) is distributed with map-side partial aggregation;
 only the final per-language model table (≈ |langs| x |vocab| rows, MBs) ever
 reaches the driver.
 
-Scoring (``lid_udf``) mirrors the fastText stage (fasttext_wrapper.py:39-45):
-the model is broadcast once (a plain dict — small, picklable), each executor
-scores Arrow batches, output is a struct(lang, conf) with top-1 semantics.
-When the real ``fasttext`` package + a model file are available,
-``fasttext_lid_udf`` uses a per-executor lazy singleton instead (the C++
-object is never pickled/broadcast — SURVEY.md §7.3).
+Scoring runs inside the fused enrich pass (operators/enrich.py): the NB
+model is broadcast once and scored per Arrow batch. When a fastText model
+file is available, the model is a per-executor lazy singleton instead (the
+C++ object is never pickled/broadcast — SURVEY.md §7.3), and
+``fasttext_top1`` is the one top-1 decode (fasttext_wrapper.py:39-45) that
+the enrich pass and ``fasttext_lid_udf`` share.
 """
 
 from __future__ import annotations
@@ -94,35 +94,6 @@ def train_ngram_model_spark(
     return NgramNBModel(logprobs, defaults, priors, n=n)
 
 
-def model_table_df(spark: SparkSession, model: NgramNBModel) -> DataFrame:
-    """The model as a flat (lang, gram, logprob) DataFrame — the broadcastable
-    dimension-table form (SURVEY.md §2.8 L8), for join-based scoring or
-    persistence next to the corpus."""
-    return spark.createDataFrame(
-        model.table(), schema="lang string, gram string, logprob double"
-    )
-
-
-def lid_udf(spark_or_sc, model: NgramNBModel):
-    """Struct(lang, conf) scoring UDF over a text column; model broadcast once."""
-    sc = getattr(spark_or_sc, "sparkContext", spark_or_sc)
-    bc = sc.broadcast(model)
-
-    @F.pandas_udf(LID_SCHEMA)
-    def _lid(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        m = bc.value
-        for series in batches:
-            results = m.detect_batch(series.tolist())
-            yield pd.DataFrame(
-                {
-                    "lang": [r[0] for r in results],
-                    "conf": [r[1] for r in results],
-                }
-            )
-
-    return _lid
-
-
 # ---------------------------------------------------------------------------
 # Real fastText path (gated): used automatically when the native package and a
 # model file are present (e.g. shipped via spark-submit --files lid.176.ftz).
@@ -183,10 +154,23 @@ def fasttext_available() -> bool:
         return numpy_engine_supports(path)
 
 
+def fasttext_top1(model, texts) -> list[tuple[str | None, float]]:
+    """(lang, conf) per text for one batch, fasttext_wrapper.py:39-45
+    semantics: newlines folded to spaces, predict k=1, the __label__ prefix
+    stripped, conf 0.0 when no label comes back."""
+    labels, probs = model.predict(
+        [(t or "").replace("\n", " ") for t in texts], k=1
+    )
+    return [
+        (l[0].removeprefix("__label__") if l else None, float(p[0]) if len(p) else 0.0)
+        for l, p in zip(labels, probs)
+    ]
+
+
 def fasttext_lid_udf(model_path: str | None = None):
-    """fastText batch scorer (fasttext_wrapper.py:39-45 semantics): predict
-    k=1, strip the __label__ prefix, emit (lang, conf). Lazy per-executor
-    model load; the path (a string) is the only thing captured in the closure.
+    """fastText batch scorer emitting struct(lang, conf) via fasttext_top1.
+    Lazy per-executor model load; the path (a string) is the only thing
+    captured in the closure.
     """
     path = model_path or os.environ["FASTTEXT_MODEL_PATH"]
 
@@ -194,13 +178,9 @@ def fasttext_lid_udf(model_path: str | None = None):
     def _ft(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         model = _load_fasttext(path)
         for series in batches:
-            texts = [(t or "").replace("\n", " ") for t in series]
-            labels, probs = model.predict(texts, k=1)
+            lid = fasttext_top1(model, series)
             yield pd.DataFrame(
-                {
-                    "lang": [l[0].removeprefix("__label__") if l else None for l in labels],
-                    "conf": [float(p[0]) if len(p) else 0.0 for p in probs],
-                }
+                {"lang": [r[0] for r in lid], "conf": [r[1] for r in lid]}
             )
 
     return _ft

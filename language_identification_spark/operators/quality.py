@@ -1,8 +1,9 @@
-"""Quality operators: stats UDF (Python, once) + native rule expressions (JVM).
+"""Quality operators: native rule expressions (JVM) over the stats struct.
 
-``with_doc_stats`` computes the per-document statistics struct in one Arrow-
-batched UDF. Everything downstream — threshold comparisons, the drop_reasons
-array, the keep flag — is native Column expressions, so:
+The per-document statistics struct (``STATS_SCHEMA``) is computed in the
+fused enrich pass (operators/enrich.py), once per document in Python.
+Everything downstream — threshold comparisons, the drop_reasons array, the
+keep flag — is native Column expressions, so:
 
 - re-tuning thresholds re-runs only JVM exprs, never the Python stage;
 - Catalyst can push the ``keep`` predicate into later stages / prune columns;
@@ -14,9 +15,6 @@ the row-wise oracle, asserted in tests/test_parity.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -26,20 +24,9 @@ from language_identification_spark.oracle.quality import (
     STAT_FIELDS,
     WORD_LENGTH_RULE_LANGS,
     QualityConfig,
-    doc_stats,
 )
 
 STATS_SCHEMA = StructType([StructField(f, DoubleType()) for f in STAT_FIELDS])
-
-
-@F.pandas_udf(STATS_SCHEMA)
-def doc_stats_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    for series in batches:
-        yield pd.DataFrame([doc_stats(t) for t in series], columns=STAT_FIELDS)
-
-
-def with_doc_stats(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    return df.withColumn("stats", doc_stats_udf(F.col(text_col)))
 
 
 def rule_columns(

@@ -5,8 +5,8 @@ Stage graph (all narrow until the metrics aggregation):
     scan pages (column-pruned: url, warc_ts, html)
       -> repartition(hash(url))            # uniform key defeats host skew
       -> extract_text_udf                  # Arrow batch, Python
-      -> doc_stats_udf                     # Arrow batch, Python
-      -> lid_udf                           # Arrow batch, Python, broadcast model
+      -> enrich_udf                        # ONE Arrow batch pass, Python:
+                                           # stats + langid + perplexity
       -> rule exprs + scrub_expr           # JVM, whole-stage codegen
       -> write results partitioned by bucket
     metrics = results.groupBy(rule).count()  # the only shuffle besides repartition
@@ -145,11 +145,18 @@ def _manifest_path(out_dir: str) -> str:
 
 
 def read_manifest(out_dir: str) -> dict:
+    """The bucket manifest, or an empty one when no pass has committed yet.
+    ``_write_manifest`` replaces the file atomically, so a manifest that does
+    not parse was damaged from outside: raise instead of recomputing every
+    bucket."""
+    path = _manifest_path(out_dir)
     try:
-        with open(_manifest_path(out_dir)) as f:
+        with open(path) as f:
             return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
+    except FileNotFoundError:
         return {"buckets_done": [], "run_history": []}
+    except ValueError as e:  # JSONDecodeError, UnicodeDecodeError
+        raise ValueError(f"corrupt bucket manifest {path}: {e}") from e
 
 
 def _write_manifest(out_dir: str, manifest: dict) -> None:

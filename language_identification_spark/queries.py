@@ -10,53 +10,10 @@ Cross-engine parity primitives (verified): md5(string) hex matches, conv(hex)
 matches, left-to-right double summation in F.aggregate matches DuckDB
 list_dot_product, string_split/split on '' both yield char arrays.
 
-Operator coverage map (reference file:line in each docstring):
-  A1 char_freq, A2 char_doc_freq, A3 length_histogram, A4+K3 word_doc_freq,
-  A5 ngram_counts, A9 doc_perplexity, A13/W2 top_words_per_lang,
-  A14 exact_dedup/fingerprint, J5 dictionary_lookup, J6 multidict_lookup,
-  J9 unique_words_per_lang, J10 stopword_anti_join, J11 lang_dim_join
-  (real ported dims), W4 zipf_rank, SO1/SO2 charset_setops;
-  dedup: minhash_signatures / lsh_band_buckets / jaccard_top_pairs /
-  simhash (60-bit) / simhash_near_dup / dedup_clusters (connected
-  components) / dedup_keep_list (exact+near composition);
-  similarity: cosine_topk / ivf_topk / kmeans_ivf_train /
-  embedding_near_dup (LSH candidates + exact rerank, mirrored oracle) /
-  bm25_topk (sparse-text retrieval twin, operators/bm25.py);
-  quality: quality_stats_sql (+ the flagship quality_pipeline and its
-  production-threshold variant, oracled in __spark_entry__/oracle/
-  pipeline_sql.py) + gopher_repetition (Rae et al. Table A1 repetition
-  family, operators/repetition.py); hygiene: decontaminate (benchmark
-  8-gram overlap, broadcast set semi-join, operators/decontaminate.py) +
-  paragraph_dedup (Dolma-style global paragraph dedup,
-  operators/paradedup.py) + c4_line_filter (C4 line rules + page vetoes,
-  zero-exchange narrow map, operators/c4.py) + url_dedup (canonicalize +
-  URL-level dedup, operators/urlnorm.py) + host_stats_salted (salted
-  two-phase agg for hot-host skew, operators/hoststats.py);
-  scrub: scrub_sql; langid: script_langid_sql
-  + script_charset_join (full scripts.json-grade charset dim, J1/J2/J4/J12);
-  KN LMs: word_kn_ppl + char_kn_ppl (order-2 train+score replayed in SQL,
-  oracle/kn_sql.py); L5 textcat_langid (Cavnar-Trenkle out-of-place rank
-  distance, corpus-trained profiles, operators/textcat.py); L2
-  langid_nb_rank (byte-ngram NB, langid.py rank/set_languages semantics) +
-  L4 cld2_postprocess + L3 langdetect_filter (wrapper rules),
-  operators/langid_bytes.py; LSH skew defense: lsh_bucket_cap_audit;
-  tokens: token_count / bpe_token_count; splits: deterministic_split +
-  host_disjoint_split (leakage-safe, operators/mixer.py) +
-  split_leakage_audit (measured straddle counts per scheme);
-  mirrors: host_mirror_pairs (fp-bounded host-pair join, operators/mirrors.py);
-  template spam: template_spam_groups (punctuation-skeleton fp, operators/templates.py);
-  packing: pack_sequences (concat-and-chop window spans, operators/packing.py)
-  + chunk_documents (overlapping RAG windows, operators/chunking.py);
-  retrieval/eval: bm25_topk + tfidf_keywords + langid_eval (P/R/F1 via
-  operators/evalmetrics.py) + lsh_recall_eval (measured banding recall)
-  + pq_encode (operators/pq.py) + winnow_fingerprints (operators/winnow.py);
-  skew/composition: skew_join_salted + host_lang_consistency +
-  corpus_curation (six gated stages chained) + url_word_score;
-  F14 deseret_translit (weird-font -> Deseret -> phonemes, functions/deseret.py);
-  P8 term_cleanup (has_text/has_digit quirks + norm_text key);
-  reporting: rollup_counts; windows/sessions: events_hourly /
-  events_sessionize; TPC-H-style: pricing_summary / order_revenue_topk /
-  shipping_priority / regional_revenue / promo_revenue.
+The gates are registered in ``GATES`` at the end of this module and in
+the sibling ``queries_*`` family modules; registry.py assembles them in
+registry order. ``python -m language_identification_spark query list`` prints
+the full inventory.
 """
 
 from __future__ import annotations
@@ -662,73 +619,6 @@ FROM hashed GROUP BY doc_id
 )
 
 
-def q_jaccard_top_pairs(spark, sf_dir):
-    """N-gram Jaccard near-dup: top-20 most similar doc pairs by word-3-gram
-    Jaccard (set-similarity join: explode shingles -> self-join -> agg).
-    Total tie-break (jaccard desc, a, b); jaccard is a ratio of ints so the
-    double value is identical across engines."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    sh = docs.select(
-        "doc_id", F.explode(word_ngrams_expr("text", 3)).alias("sh")
-    ).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    pairs = (
-        sh.alias("x")
-        .join(sh.alias("y"), "sh")
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    # sizes is |docs| rows (tiny next to the pair table) — broadcast both
-    # lookups so the pair table never shuffles again after its groupBy
-    scored = (
-        pairs.join(
-            F.broadcast(
-                sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sza")
-            ),
-            "a",
-        )
-        .join(
-            F.broadcast(
-                sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "szb")
-            ),
-            "b",
-        )
-        .withColumn("jaccard", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
-    )
-    # limit first (TakeOrderedAndProject), THEN rank: the candidate-pair
-    # table is corpus-quadratic in the worst case — never push it through a
-    # single-partition window exchange just to number 20 rows
-    top = scored.orderBy(F.desc("jaccard"), F.asc("a"), F.asc("b")).limit(20)
-    w = Window.orderBy(F.desc("jaccard"), F.asc("a"), F.asc("b"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "a", "b", F.round("jaccard", 6).alias("jaccard")
-    )
-
-
-SQL_JACCARD_TOP_PAIRS = """
-WITH words AS (
-  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
-  FROM words, unnest(range(1, greatest(len(ws) - 2, 0) + 1)) AS t(i)
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-  FROM sh x JOIN sh y USING (sh) WHERE x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id
-), scored AS (
-  SELECT a, b, inter * 1.0 / (sa.sz + sb.sz - inter) AS jaccard
-  FROM pairs JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-)
-SELECT rank, a, b, round(jaccard, 6) AS jaccard FROM (
-  SELECT a, b, jaccard, row_number() OVER (ORDER BY jaccard DESC, a, b) AS rank
-  FROM scored
-) WHERE rank <= 20
-"""
-
-
 # Prefix-filter Jaccard threshold as an exact integer ratio (4/5 = 0.8).
 # Integer arithmetic end-to-end keeps the gate bit-identical across engines:
 # ceil(0.8*s) = (4*s + 4) div 5, and the final >= 0.8 test is 5*inter >=
@@ -740,8 +630,9 @@ JACCARD_PREFIX_T_DEN = 5
 def q_jaccard_join_prefix(spark, sf_dir):
     """EXACT set-similarity self-join at Jaccard >= 0.8 via prefix filtering
     (AllPairs / SSJoin family — Bayardo, Ma & Srikant WWW'07; Chaudhuri,
-    Ganti & Kaushik ICDE'06) — the scale-correct replacement for the
-    corpus-quadratic q_jaccard_top_pairs baseline.
+    Ganti & Kaushik ICDE'06), which never forms the corpus-quadratic
+    shingle self-join (tests/test_jaccard_prefix.py keeps that brute force
+    as the reference).
 
     Order every doc's distinct word-3-gram shingles by GLOBAL shingle
     document-frequency ascending (rarest first; ties by shingle value so the
@@ -760,8 +651,7 @@ def q_jaccard_join_prefix(spark, sf_dir):
     window partitions by doc_id (bounded by doc length, never a global
     exchange). This is the exact-verification stage a production dedup
     stack runs atop MinHash-LSH banding (reference anchor: the survey's
-    n-gram Jaccard dedup row; same shingle convention as
-    q_jaccard_top_pairs, whose top pairs at >= 0.8 this reproduces)."""
+    n-gram Jaccard dedup row)."""
     tn, td = JACCARD_PREFIX_T_NUM, JACCARD_PREFIX_T_DEN
     docs = _spread(_t(spark, sf_dir, "documents"))
     sh = docs.select(
@@ -4221,7 +4111,7 @@ SQL_BPE_FERTILITY = _sql_bpe_fertility()
 def q_lsh_band_buckets(spark, sf_dir):
     """MinHash-LSH banding — the 100 TB near-dup path: 8-permutation
     signatures split into 4 bands of 2; docs sharing a band bucket are
-    candidate pairs (checked exactly afterwards, q_jaccard_top_pairs). Output:
+    candidate pairs (checked exactly afterwards, q_jaccard_join_prefix). Output:
     buckets holding >1 doc. The whole thing is two hash shuffles — no
     quadratic self-join ever touches the full corpus. Round 5: runs the
     config-driven operators/minhash.py engine at the toy 4x2 banding
@@ -4645,60 +4535,8 @@ SELECT rank, word, n FROM (
 """.format(stoplist=", ".join(f"'{w}'" for w in STOPWORDS_DIM))
 
 
-def q_events_sessionize(spark, sf_dir):
-    """Sessionization via gap detection: a new session starts when a user's
-    inter-event gap exceeds 30 minutes (lag + conditional cumulative sum —
-    the classic two-window composition). Output: per-user session count and
-    the largest session's event count. The shuffle key is user_id; at 100 TB
-    scale hot users are the skew risk — AQE skew handling plus the salting
-    pattern of SURVEY.md §4.2 apply."""
-    ev = _spread(_t(spark, sf_dir, "events"))
-    by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # ts is TIMESTAMP_NTZ in the testdata; cast via TIMESTAMP (session UTC)
-    # to epoch seconds — only the difference matters
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(by_user)
-    marked = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(gap.isNull() | (gap > 1800), 1).otherwise(0).alias("new_sess"),
-    )
-    sess = marked.withColumn(
-        "sess_id", F.sum("new_sess").over(by_user)
-    )
-    per_sess = sess.groupBy("user_id", "sess_id").agg(
-        F.count("*").alias("n_events")
-    )
-    return per_sess.groupBy("user_id").agg(
-        F.count("*").alias("n_sessions"),
-        F.max("n_events").alias("max_session_events"),
-    )
-
-
-SQL_EVENTS_SESSIONIZE = """
-WITH marked AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM marked
-), per_sess AS (
-  SELECT user_id, sess_id, count(*) AS n_events FROM sess GROUP BY user_id, sess_id
-)
-SELECT user_id, count(*) AS n_sessions, max(n_events) AS max_session_events
-FROM per_sess GROUP BY user_id
-"""
-
-
 # ---------------------------------------------------------------------------
-# relational core on the TPC-H-ish tables (scan/filter/join/agg/sort/limit)
+# set operations, splits and mixing
 # ---------------------------------------------------------------------------
 
 
@@ -4734,57 +4572,6 @@ UNION ALL
 SELECT 'en_except_de', count(*) FROM (SELECT chr FROM en EXCEPT SELECT chr FROM de)
 UNION ALL
 SELECT 'en_union_de', count(*) FROM (SELECT chr FROM en UNION SELECT chr FROM de)
-"""
-
-
-def q_shipping_priority(spark, sf_dir):
-    """TPC-H Q3-shaped: selective date predicates on three tables, join,
-    revenue agg, top-10 — the classic scan->filter->join->agg->topk chain;
-    both date filters push into the parquet scans (asserted for Q1's filter
-    in tests/test_plans.py; same mechanism)."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1995-03-15")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1995-03-15")
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-    )
-    w = Window.orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "rank",
-            "l_orderkey",
-            "revenue",
-            F.col("o_orderdate").cast("string").alias("o_orderdate"),
-            "o_orderpriority",
-        )
-    )
-
-
-SQL_SHIPPING_PRIORITY = """
-WITH joined AS (
-  SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-         round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE c.c_mktsegment = 'BUILDING'
-    AND o.o_orderdate < DATE '1995-03-15'
-    AND l.l_shipdate > DATE '1995-03-15'
-  GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-)
-SELECT rank, l_orderkey, revenue, o_orderdate::VARCHAR AS o_orderdate, o_orderpriority
-FROM (
-  SELECT *, row_number() OVER (ORDER BY revenue DESC, l_orderkey) AS rank FROM joined
-) WHERE rank <= 10
 """
 
 
@@ -5383,183 +5170,6 @@ SELECT coalesce(lang, '<all>') AS lang,
        coalesce(source, '<all>') AS source,
        count(*) AS n_docs, sum(n_chars)::BIGINT AS n_chars
 FROM documents GROUP BY ROLLUP (lang, source)
-"""
-
-
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-shaped aggregation over lineitem: the partial+final hash-agg
-    workhorse; predicate pushes into the parquet scan."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-SQL_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity) AS sum_qty,
-       sum(l_extendedprice) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-       round(avg(l_quantity), 6) AS avg_qty,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_order_revenue_topk(spark, sf_dir):
-    """Join + agg + top-k: revenue per order joined to customer/nation,
-    broadcast for the small dims. Top 10 with total tie-break."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    rev = li.groupBy("l_orderkey").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
-            "revenue"
-        )
-    )
-    joined = (
-        rev.join(orders, rev.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-    )
-    w = Window.orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-    return (
-        joined.select("l_orderkey", "revenue", F.col("n_name").alias("nation"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-    )
-
-
-SQL_ORDER_REVENUE_TOPK = """
-WITH rev AS (
-  SELECT l_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-  FROM lineitem GROUP BY l_orderkey
-), joined AS (
-  SELECT rev.l_orderkey, rev.revenue, n.n_name AS nation
-  FROM rev JOIN orders o ON rev.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-)
-SELECT l_orderkey, revenue, nation, rank FROM (
-  SELECT *, row_number() OVER (ORDER BY revenue DESC, l_orderkey) AS rank FROM joined
-) WHERE rank <= 10
-"""
-
-
-def q_regional_revenue(spark, sf_dir):
-    """TPC-H Q5-shaped: revenue per nation for one region and year, with the
-    local-supplier condition (supplier and customer share the nation) — the
-    classic 6-table join chain. region/nation/customer/supplier are
-    broadcast dims; lineitem x orders is the one fact-fact shuffle join;
-    Catalyst pushes both date predicates into the scans."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1996-01-01")
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(supp),
-            (li.l_suppkey == supp.s_suppkey)
-            & (cust.c_nationkey == supp.s_nationkey),
-        )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return (
-        joined.groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-SQL_REGIONAL_REVENUE = """
-SELECT n.n_name AS nation,
-       round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue,
-       count(*) AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = 'ASIA'
-  AND o.o_orderdate >= DATE '1995-01-01' AND o.o_orderdate < DATE '1996-01-01'
-GROUP BY n.n_name
-"""
-
-
-def q_promo_revenue(spark, sf_dir):
-    """TPC-H Q14-shaped: promo revenue share for one month — a fact x dim
-    join (part broadcast) feeding a conditional aggregate (the
-    sum(CASE)/sum ratio pattern). Single output row; ratio rounded."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1995-09-01") & (F.col("l_shipdate") < "1995-10-01")
-    )
-    part = _t(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    return joined.agg(
-        F.round(
-            F.sum(F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(0.0))
-            * 100.0
-            / F.sum(rev),
-            6,
-        ).alias("promo_pct"),
-        F.count("*").alias("n_items"),
-    )
-
-
-SQL_PROMO_REVENUE = """
-SELECT round(100.0 * sum(CASE WHEN p.p_type LIKE 'PROMO%'
-                              THEN l.l_extendedprice * (1 - l.l_discount)
-                              ELSE 0.0 END)
-             / sum(l.l_extendedprice * (1 - l.l_discount)), 6) AS promo_pct,
-       count(*) AS n_items
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= DATE '1995-09-01' AND l.l_shipdate < DATE '1995-10-01'
-"""
-
-
-def q_events_hourly(spark, sf_dir):
-    """Windowed-aggregation analog on the events table (the batch form of the
-    streaming tumbling-window rollup): per (hour, event_type) counts + value."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.date_format("ts", "yyyy-MM-dd HH").alias("hour"),
-        "event_type",
-    ).agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
-
-
-SQL_EVENTS_HOURLY = """
-SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
-       count(*) AS n, round(sum(value), 4) AS total_value
-FROM events GROUP BY 1, 2
 """
 
 
@@ -7327,241 +6937,127 @@ FROM assigned GROUP BY split, lang
 
 
 # ---------------------------------------------------------------------------
-# registry
+# registry: {name: (builder, oracle SQL)}
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "char_freq": q_char_freq,
-    "char_doc_freq": q_char_doc_freq,
-    "length_histogram": q_length_histogram,
-    "word_doc_freq": q_word_doc_freq,
-    "top_words_per_lang": q_top_words_per_lang,
-    "unique_words_per_lang": q_unique_words_per_lang,
-    "merge_wordlists": q_merge_wordlists,
-    "dictionary_lookup": q_dictionary_lookup,
-    "multidict_lookup": q_multidict_lookup,
-    "length_quantiles": q_length_quantiles,
-    "lang_dim_join": q_lang_dim_join,
-    "ngram_counts": q_ngram_counts,
-    "zipf_rank": q_zipf_rank,
-    "exact_dedup": q_exact_dedup,
-    "minhash_signatures": q_minhash_signatures,
-    "jaccard_top_pairs": q_jaccard_top_pairs,
-    "jaccard_join_prefix": q_jaccard_join_prefix,
-    "simhash": q_simhash,
-    "simhash_near_dup": q_simhash_near_dup,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_keep_list": q_dedup_keep_list,
-    "dedup_keep_best": q_dedup_keep_best,
-    "bloom_dedup": q_bloom_dedup,
-    "lsh_band_buckets": q_lsh_band_buckets,
-    "minhash_prod_band_buckets": q_minhash_prod_band_buckets,
-    "minhash_prod_recall_eval": q_minhash_prod_recall_eval,
-    "minhash_prod_bucket_cap_audit": q_minhash_prod_bucket_cap_audit,
-    "minhash_prod_dedup_pipeline": q_minhash_prod_dedup_pipeline,
-    "minhash_decontaminate": q_minhash_decontaminate,
-    "stopword_anti_join": q_stopword_anti_join,
-    "events_sessionize": q_events_sessionize,
-    "cosine_topk": q_cosine_topk,
-    "ivf_topk": q_ivf_topk,
-    "kmeans_ivf_train": q_kmeans_ivf_train,
-    "semdedup": q_semdedup,
-    "embedding_near_dup": q_embedding_near_dup,
-    "lsh_bucket_cap_audit": q_lsh_bucket_cap_audit,
-    "quality_stats_sql": q_quality_stats_sql,
-    "char_entropy": q_char_entropy,
-    "gopher_repetition": q_gopher_repetition,
-    "decontaminate": q_decontaminate,
-    "paragraph_dedup": q_paragraph_dedup,
-    "c4_line_filter": q_c4_line_filter,
-    "url_dedup": q_url_dedup,
-    "host_pagerank": q_host_pagerank,
-    "readability_scores": q_readability_scores,
-    "host_template_lines": q_host_template_lines,
-    "template_scrub": q_template_scrub,
-    "content_blocks": q_content_blocks,
-    "main_content_extract": q_main_content_extract,
-    "crawl_priority": q_crawl_priority,
-    "anchor_text_profile": q_anchor_text_profile,
-    "host_cap_sample": q_host_cap_sample,
-    "host_harmonic": q_host_harmonic,
-    "corpus_drift": q_corpus_drift,
-    "domain_blocklist": q_domain_blocklist,
-    "bm25_topk": q_bm25_topk,
-    "pack_sequences": q_pack_sequences,
-    "chunk_documents": q_chunk_documents,
-    "tfidf_keywords": q_tfidf_keywords,
-    "url_word_score": q_url_word_score,
-    "langid_eval": q_langid_eval,
-    "skew_join_salted": q_skew_join_salted,
-    "corpus_curation": q_corpus_curation,
-    "host_lang_consistency": q_host_lang_consistency,
-    "lsh_recall_eval": q_lsh_recall_eval,
-    "pq_encode": q_pq_encode,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "winnow_overlap_pairs": q_winnow_overlap_pairs,
-    "batch_plan": q_batch_plan,
-    "snapshot_merge": q_snapshot_merge,
-    "cdc_chunks": q_cdc_chunks,
-    "vocab_coverage": q_vocab_coverage,
-    "vocab_coverage_binned": q_vocab_coverage_binned,
-    "langid_calibration": q_langid_calibration,
-    "split_token_budget": q_split_token_budget,
-    "host_stats_salted": q_host_stats_salted,
-    "ccnet_lang_buckets": q_ccnet_lang_buckets,
-    "ccnet_buckets_approx": q_ccnet_buckets_approx,
-    "span_dedup": q_span_dedup,
-    "span_dedup_keep_first": q_span_dedup_keep_first,
-    "scrub_sql": q_scrub_sql,
-    "pii_cards": q_pii_cards,
-    "script_langid_sql": q_script_langid_sql,
-    "script_charset_join": q_script_charset_join,
-    "doc_perplexity": q_doc_perplexity,
-    "fingerprint": q_fingerprint,
-    "token_count": q_token_count,
-    "bpe_token_count": q_bpe_token_count,
-    "bpe_train": q_bpe_train,
-    "bpe_tokenize": q_bpe_tokenize,
-    "bpe_fertility": q_bpe_fertility,
-    "charset_setops": q_charset_setops,
-    "shipping_priority": q_shipping_priority,
-    "deterministic_split": q_deterministic_split,
-    "host_disjoint_split": q_host_disjoint_split,
-    "split_leakage_audit": q_split_leakage_audit,
-    "host_mirror_pairs": q_host_mirror_pairs,
-    "template_spam_groups": q_template_spam_groups,
-    "lang_mix_sample": q_lang_mix_sample,
-    "temperature_mix_sample": q_temperature_mix_sample,
-    "dsir_select": q_dsir_select,
-    "deseret_translit": q_deseret_translit,
-    "term_cleanup": q_term_cleanup,
-    "rollup_counts": q_rollup_counts,
-    "pricing_summary": q_pricing_summary,
-    "order_revenue_topk": q_order_revenue_topk,
-    "regional_revenue": q_regional_revenue,
-    "promo_revenue": q_promo_revenue,
-    "events_hourly": q_events_hourly,
-    "textcat_langid": q_textcat_langid,
-    "langid_nb_rank": q_langid_nb_rank,
-    "code_switch_detect": q_code_switch_detect,
-    "cld2_postprocess": q_cld2_postprocess,
-    "langdetect_filter": q_langdetect_filter,
-}
-
-ORACLE_SQL: dict[str, str] = {
-    "char_freq": SQL_CHAR_FREQ,
-    "char_doc_freq": SQL_CHAR_DOC_FREQ,
-    "length_histogram": SQL_LENGTH_HISTOGRAM,
-    "word_doc_freq": SQL_WORD_DOC_FREQ,
-    "top_words_per_lang": SQL_TOP_WORDS_PER_LANG,
-    "unique_words_per_lang": SQL_UNIQUE_WORDS_PER_LANG,
-    "merge_wordlists": SQL_MERGE_WORDLISTS,
-    "dictionary_lookup": SQL_DICTIONARY_LOOKUP,
-    "multidict_lookup": SQL_MULTIDICT_LOOKUP,
-    "length_quantiles": SQL_LENGTH_QUANTILES,
-    "lang_dim_join": SQL_LANG_DIM_JOIN,
-    "ngram_counts": SQL_NGRAM_COUNTS,
-    "zipf_rank": SQL_ZIPF_RANK,
-    "exact_dedup": SQL_EXACT_DEDUP,
-    "minhash_signatures": SQL_MINHASH_SIGNATURES,
-    "jaccard_top_pairs": SQL_JACCARD_TOP_PAIRS,
-    "jaccard_join_prefix": SQL_JACCARD_JOIN_PREFIX,
-    "simhash": SQL_SIMHASH,
-    "simhash_near_dup": SQL_SIMHASH_NEAR_DUP,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "dedup_keep_list": SQL_DEDUP_KEEP_LIST,
-    "dedup_keep_best": SQL_DEDUP_KEEP_BEST,
-    "bloom_dedup": SQL_BLOOM_DEDUP,
-    "lsh_band_buckets": SQL_LSH_BAND_BUCKETS,
-    "minhash_prod_band_buckets": SQL_MINHASH_PROD_BAND_BUCKETS,
-    "minhash_prod_recall_eval": SQL_MINHASH_PROD_RECALL_EVAL,
-    "minhash_prod_bucket_cap_audit": SQL_MINHASH_PROD_BUCKET_CAP_AUDIT,
-    "minhash_prod_dedup_pipeline": SQL_MINHASH_PROD_DEDUP_PIPELINE,
-    "minhash_decontaminate": SQL_MINHASH_DECONTAMINATE,
-    "stopword_anti_join": SQL_STOPWORD_ANTI_JOIN,
-    "events_sessionize": SQL_EVENTS_SESSIONIZE,
-    "cosine_topk": SQL_COSINE_TOPK,
-    "ivf_topk": SQL_IVF_TOPK,
-    "kmeans_ivf_train": SQL_KMEANS_IVF_TRAIN,
-    "semdedup": SQL_SEMDEDUP,
-    "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
-    "lsh_bucket_cap_audit": SQL_LSH_BUCKET_CAP_AUDIT,
-    "quality_stats_sql": SQL_QUALITY_STATS,
-    "char_entropy": SQL_CHAR_ENTROPY,
-    "gopher_repetition": SQL_GOPHER_REPETITION,
-    "decontaminate": SQL_DECONTAMINATE,
-    "paragraph_dedup": SQL_PARAGRAPH_DEDUP,
-    "c4_line_filter": SQL_C4_LINE_FILTER,
-    "url_dedup": SQL_URL_DEDUP,
-    "host_pagerank": SQL_HOST_PAGERANK,
-    "readability_scores": SQL_READABILITY_SCORES,
-    "host_template_lines": SQL_HOST_TEMPLATE_LINES,
-    "template_scrub": SQL_TEMPLATE_SCRUB,
-    "content_blocks": SQL_CONTENT_BLOCKS,
-    "main_content_extract": SQL_MAIN_CONTENT_EXTRACT,
-    "crawl_priority": SQL_CRAWL_PRIORITY,
-    "anchor_text_profile": SQL_ANCHOR_TEXT_PROFILE,
-    "host_cap_sample": SQL_HOST_CAP_SAMPLE,
-    "host_harmonic": SQL_HOST_HARMONIC,
-    "corpus_drift": SQL_CORPUS_DRIFT,
-    "domain_blocklist": SQL_DOMAIN_BLOCKLIST,
-    "bm25_topk": SQL_BM25_TOPK,
-    "pack_sequences": SQL_PACK_SEQUENCES,
-    "chunk_documents": SQL_CHUNK_DOCUMENTS,
-    "tfidf_keywords": SQL_TFIDF_KEYWORDS,
-    "url_word_score": SQL_URL_WORD_SCORE,
-    "langid_eval": SQL_LANGID_EVAL,
-    "skew_join_salted": SQL_SKEW_JOIN_SALTED,
-    "corpus_curation": SQL_CORPUS_CURATION,
-    "host_lang_consistency": SQL_HOST_LANG_CONSISTENCY,
-    "lsh_recall_eval": SQL_LSH_RECALL_EVAL,
-    "pq_encode": SQL_PQ_ENCODE,
-    "winnow_fingerprints": SQL_WINNOW_FINGERPRINTS,
-    "winnow_overlap_pairs": SQL_WINNOW_OVERLAP_PAIRS,
-    "batch_plan": SQL_BATCH_PLAN,
-    "snapshot_merge": SQL_SNAPSHOT_MERGE,
-    "cdc_chunks": SQL_CDC_CHUNKS,
-    "vocab_coverage": SQL_VOCAB_COVERAGE,
-    "vocab_coverage_binned": SQL_VOCAB_COVERAGE_BINNED,
-    "langid_calibration": SQL_LANGID_CALIBRATION,
-    "split_token_budget": SQL_SPLIT_TOKEN_BUDGET,
-    "host_stats_salted": SQL_HOST_STATS_SALTED,
-    "ccnet_lang_buckets": SQL_CCNET_LANG_BUCKETS,
-    "ccnet_buckets_approx": SQL_CCNET_BUCKETS_APPROX,
-    "span_dedup": SQL_SPAN_DEDUP,
-    "span_dedup_keep_first": SQL_SPAN_DEDUP_KEEP_FIRST,
-    "scrub_sql": SQL_SCRUB,
-    "pii_cards": SQL_PII_CARDS,
-    "script_langid_sql": SQL_SCRIPT_LANGID,
-    "script_charset_join": SQL_SCRIPT_CHARSET_JOIN,
-    "doc_perplexity": SQL_DOC_PERPLEXITY,
-    "fingerprint": SQL_FINGERPRINT,
-    "token_count": SQL_TOKEN_COUNT,
-    "bpe_token_count": SQL_BPE_TOKEN_COUNT,
-    "bpe_train": SQL_BPE_TRAIN,
-    "bpe_tokenize": SQL_BPE_TOKENIZE,
-    "bpe_fertility": SQL_BPE_FERTILITY,
-    "charset_setops": SQL_CHARSET_SETOPS,
-    "shipping_priority": SQL_SHIPPING_PRIORITY,
-    "deterministic_split": SQL_DETERMINISTIC_SPLIT,
-    "host_disjoint_split": SQL_HOST_DISJOINT_SPLIT,
-    "split_leakage_audit": SQL_SPLIT_LEAKAGE_AUDIT,
-    "host_mirror_pairs": SQL_HOST_MIRROR_PAIRS,
-    "template_spam_groups": SQL_TEMPLATE_SPAM_GROUPS,
-    "lang_mix_sample": SQL_LANG_MIX_SAMPLE,
-    "temperature_mix_sample": SQL_TEMPERATURE_MIX_SAMPLE,
-    "dsir_select": SQL_DSIR_SELECT,
-    "deseret_translit": SQL_DESERET_TRANSLIT,
-    "term_cleanup": SQL_TERM_CLEANUP,
-    "rollup_counts": SQL_ROLLUP_COUNTS,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "order_revenue_topk": SQL_ORDER_REVENUE_TOPK,
-    "regional_revenue": SQL_REGIONAL_REVENUE,
-    "promo_revenue": SQL_PROMO_REVENUE,
-    "events_hourly": SQL_EVENTS_HOURLY,
-    "textcat_langid": SQL_TEXTCAT_LANGID,
-    "langid_nb_rank": SQL_LANGID_NB_RANK,
-    "code_switch_detect": SQL_CODE_SWITCH_DETECT,
-    "cld2_postprocess": SQL_CLD2_POSTPROCESS,
-    "langdetect_filter": SQL_LANGDETECT_FILTER,
+GATES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "char_freq": (q_char_freq, SQL_CHAR_FREQ),
+    "char_doc_freq": (q_char_doc_freq, SQL_CHAR_DOC_FREQ),
+    "length_histogram": (q_length_histogram, SQL_LENGTH_HISTOGRAM),
+    "word_doc_freq": (q_word_doc_freq, SQL_WORD_DOC_FREQ),
+    "top_words_per_lang": (q_top_words_per_lang, SQL_TOP_WORDS_PER_LANG),
+    "unique_words_per_lang": (q_unique_words_per_lang, SQL_UNIQUE_WORDS_PER_LANG),
+    "merge_wordlists": (q_merge_wordlists, SQL_MERGE_WORDLISTS),
+    "dictionary_lookup": (q_dictionary_lookup, SQL_DICTIONARY_LOOKUP),
+    "multidict_lookup": (q_multidict_lookup, SQL_MULTIDICT_LOOKUP),
+    "length_quantiles": (q_length_quantiles, SQL_LENGTH_QUANTILES),
+    "lang_dim_join": (q_lang_dim_join, SQL_LANG_DIM_JOIN),
+    "ngram_counts": (q_ngram_counts, SQL_NGRAM_COUNTS),
+    "zipf_rank": (q_zipf_rank, SQL_ZIPF_RANK),
+    "exact_dedup": (q_exact_dedup, SQL_EXACT_DEDUP),
+    "minhash_signatures": (q_minhash_signatures, SQL_MINHASH_SIGNATURES),
+    "jaccard_join_prefix": (q_jaccard_join_prefix, SQL_JACCARD_JOIN_PREFIX),
+    "simhash": (q_simhash, SQL_SIMHASH),
+    "simhash_near_dup": (q_simhash_near_dup, SQL_SIMHASH_NEAR_DUP),
+    "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    "dedup_keep_list": (q_dedup_keep_list, SQL_DEDUP_KEEP_LIST),
+    "dedup_keep_best": (q_dedup_keep_best, SQL_DEDUP_KEEP_BEST),
+    "bloom_dedup": (q_bloom_dedup, SQL_BLOOM_DEDUP),
+    "lsh_band_buckets": (q_lsh_band_buckets, SQL_LSH_BAND_BUCKETS),
+    "minhash_prod_band_buckets": (
+        q_minhash_prod_band_buckets,
+        SQL_MINHASH_PROD_BAND_BUCKETS,
+    ),
+    "minhash_prod_recall_eval": (
+        q_minhash_prod_recall_eval,
+        SQL_MINHASH_PROD_RECALL_EVAL,
+    ),
+    "minhash_prod_bucket_cap_audit": (
+        q_minhash_prod_bucket_cap_audit,
+        SQL_MINHASH_PROD_BUCKET_CAP_AUDIT,
+    ),
+    "minhash_prod_dedup_pipeline": (
+        q_minhash_prod_dedup_pipeline,
+        SQL_MINHASH_PROD_DEDUP_PIPELINE,
+    ),
+    "minhash_decontaminate": (q_minhash_decontaminate, SQL_MINHASH_DECONTAMINATE),
+    "stopword_anti_join": (q_stopword_anti_join, SQL_STOPWORD_ANTI_JOIN),
+    "cosine_topk": (q_cosine_topk, SQL_COSINE_TOPK),
+    "ivf_topk": (q_ivf_topk, SQL_IVF_TOPK),
+    "kmeans_ivf_train": (q_kmeans_ivf_train, SQL_KMEANS_IVF_TRAIN),
+    "semdedup": (q_semdedup, SQL_SEMDEDUP),
+    "embedding_near_dup": (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
+    "lsh_bucket_cap_audit": (q_lsh_bucket_cap_audit, SQL_LSH_BUCKET_CAP_AUDIT),
+    "quality_stats_sql": (q_quality_stats_sql, SQL_QUALITY_STATS),
+    "char_entropy": (q_char_entropy, SQL_CHAR_ENTROPY),
+    "gopher_repetition": (q_gopher_repetition, SQL_GOPHER_REPETITION),
+    "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
+    "paragraph_dedup": (q_paragraph_dedup, SQL_PARAGRAPH_DEDUP),
+    "c4_line_filter": (q_c4_line_filter, SQL_C4_LINE_FILTER),
+    "url_dedup": (q_url_dedup, SQL_URL_DEDUP),
+    "host_pagerank": (q_host_pagerank, SQL_HOST_PAGERANK),
+    "readability_scores": (q_readability_scores, SQL_READABILITY_SCORES),
+    "host_template_lines": (q_host_template_lines, SQL_HOST_TEMPLATE_LINES),
+    "template_scrub": (q_template_scrub, SQL_TEMPLATE_SCRUB),
+    "content_blocks": (q_content_blocks, SQL_CONTENT_BLOCKS),
+    "main_content_extract": (q_main_content_extract, SQL_MAIN_CONTENT_EXTRACT),
+    "crawl_priority": (q_crawl_priority, SQL_CRAWL_PRIORITY),
+    "anchor_text_profile": (q_anchor_text_profile, SQL_ANCHOR_TEXT_PROFILE),
+    "host_cap_sample": (q_host_cap_sample, SQL_HOST_CAP_SAMPLE),
+    "host_harmonic": (q_host_harmonic, SQL_HOST_HARMONIC),
+    "corpus_drift": (q_corpus_drift, SQL_CORPUS_DRIFT),
+    "domain_blocklist": (q_domain_blocklist, SQL_DOMAIN_BLOCKLIST),
+    "bm25_topk": (q_bm25_topk, SQL_BM25_TOPK),
+    "pack_sequences": (q_pack_sequences, SQL_PACK_SEQUENCES),
+    "chunk_documents": (q_chunk_documents, SQL_CHUNK_DOCUMENTS),
+    "tfidf_keywords": (q_tfidf_keywords, SQL_TFIDF_KEYWORDS),
+    "url_word_score": (q_url_word_score, SQL_URL_WORD_SCORE),
+    "langid_eval": (q_langid_eval, SQL_LANGID_EVAL),
+    "skew_join_salted": (q_skew_join_salted, SQL_SKEW_JOIN_SALTED),
+    "corpus_curation": (q_corpus_curation, SQL_CORPUS_CURATION),
+    "host_lang_consistency": (q_host_lang_consistency, SQL_HOST_LANG_CONSISTENCY),
+    "lsh_recall_eval": (q_lsh_recall_eval, SQL_LSH_RECALL_EVAL),
+    "pq_encode": (q_pq_encode, SQL_PQ_ENCODE),
+    "winnow_fingerprints": (q_winnow_fingerprints, SQL_WINNOW_FINGERPRINTS),
+    "winnow_overlap_pairs": (q_winnow_overlap_pairs, SQL_WINNOW_OVERLAP_PAIRS),
+    "batch_plan": (q_batch_plan, SQL_BATCH_PLAN),
+    "snapshot_merge": (q_snapshot_merge, SQL_SNAPSHOT_MERGE),
+    "cdc_chunks": (q_cdc_chunks, SQL_CDC_CHUNKS),
+    "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
+    "vocab_coverage_binned": (q_vocab_coverage_binned, SQL_VOCAB_COVERAGE_BINNED),
+    "langid_calibration": (q_langid_calibration, SQL_LANGID_CALIBRATION),
+    "split_token_budget": (q_split_token_budget, SQL_SPLIT_TOKEN_BUDGET),
+    "host_stats_salted": (q_host_stats_salted, SQL_HOST_STATS_SALTED),
+    "ccnet_lang_buckets": (q_ccnet_lang_buckets, SQL_CCNET_LANG_BUCKETS),
+    "ccnet_buckets_approx": (q_ccnet_buckets_approx, SQL_CCNET_BUCKETS_APPROX),
+    "span_dedup": (q_span_dedup, SQL_SPAN_DEDUP),
+    "span_dedup_keep_first": (q_span_dedup_keep_first, SQL_SPAN_DEDUP_KEEP_FIRST),
+    "scrub_sql": (q_scrub_sql, SQL_SCRUB),
+    "pii_cards": (q_pii_cards, SQL_PII_CARDS),
+    "script_langid_sql": (q_script_langid_sql, SQL_SCRIPT_LANGID),
+    "script_charset_join": (q_script_charset_join, SQL_SCRIPT_CHARSET_JOIN),
+    "doc_perplexity": (q_doc_perplexity, SQL_DOC_PERPLEXITY),
+    "fingerprint": (q_fingerprint, SQL_FINGERPRINT),
+    "token_count": (q_token_count, SQL_TOKEN_COUNT),
+    "bpe_token_count": (q_bpe_token_count, SQL_BPE_TOKEN_COUNT),
+    "bpe_train": (q_bpe_train, SQL_BPE_TRAIN),
+    "bpe_tokenize": (q_bpe_tokenize, SQL_BPE_TOKENIZE),
+    "bpe_fertility": (q_bpe_fertility, SQL_BPE_FERTILITY),
+    "charset_setops": (q_charset_setops, SQL_CHARSET_SETOPS),
+    "deterministic_split": (q_deterministic_split, SQL_DETERMINISTIC_SPLIT),
+    "host_disjoint_split": (q_host_disjoint_split, SQL_HOST_DISJOINT_SPLIT),
+    "split_leakage_audit": (q_split_leakage_audit, SQL_SPLIT_LEAKAGE_AUDIT),
+    "host_mirror_pairs": (q_host_mirror_pairs, SQL_HOST_MIRROR_PAIRS),
+    "template_spam_groups": (q_template_spam_groups, SQL_TEMPLATE_SPAM_GROUPS),
+    "lang_mix_sample": (q_lang_mix_sample, SQL_LANG_MIX_SAMPLE),
+    "temperature_mix_sample": (q_temperature_mix_sample, SQL_TEMPERATURE_MIX_SAMPLE),
+    "dsir_select": (q_dsir_select, SQL_DSIR_SELECT),
+    "deseret_translit": (q_deseret_translit, SQL_DESERET_TRANSLIT),
+    "term_cleanup": (q_term_cleanup, SQL_TERM_CLEANUP),
+    "rollup_counts": (q_rollup_counts, SQL_ROLLUP_COUNTS),
+    "textcat_langid": (q_textcat_langid, SQL_TEXTCAT_LANGID),
+    "langid_nb_rank": (q_langid_nb_rank, SQL_LANGID_NB_RANK),
+    "code_switch_detect": (q_code_switch_detect, SQL_CODE_SWITCH_DETECT),
+    "cld2_postprocess": (q_cld2_postprocess, SQL_CLD2_POSTPROCESS),
+    "langdetect_filter": (q_langdetect_filter, SQL_LANGDETECT_FILTER),
 }

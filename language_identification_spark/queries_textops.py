@@ -1,23 +1,8 @@
 """Gate battery extension: text canonicalization + crawl-hygiene operators.
 
-Twelve gates, same contract as queries.py (builder(spark, sf_dir) + DuckDB
-oracle over the same parquet views, fixtures synthesized identically in
-both engines):
-
-  nfc_normalize_audit — Unicode NFC canonicalization (operators/textnorm.py)
-  soft404_filter      — soft-404 / error-page drop rule (textnorm.py)
-  minhash_band_planner— Broder banding config math, exact ppm integers
-                        (operators/minhash.py:plan_bands)
-  url_latest_snapshot — keep-newest-capture recency dedup per url
-                        (operators/urlnorm.py:latest_snapshot)
-  lexical_diversity   — per-doc type/token/hapax ratios (quality signal)
-  host_quality_wilson — Wilson-bounded per-host keep-rate ranking
-                        (operators/hoststats.py:wilson_bounds_ppm)
-  crawl_delta         — added/removed/changed/unchanged across snapshots
-  token_budget_waterfill — closed-form data-mix waterfilling
-                        (operators/mixer.py:waterfill_allocation)
-  width_fold          — fullwidth->ASCII fold + control strip (the
-                        NFKC-width subset of ftfy's remaining cleanup)
+Same contract as queries.py (builder(spark, sf_dir) + DuckDB oracle over
+the same parquet views, fixtures synthesized identically in both engines).
+``python -m language_identification_spark query list`` prints the inventory.
 """
 
 from __future__ import annotations
@@ -850,32 +835,17 @@ GROUP BY doc_id
 """
 
 
-QUERIES_TEXTOPS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "nfc_normalize_audit": q_nfc_normalize_audit,
-    "soft404_filter": q_soft404_filter,
-    "minhash_band_planner": q_minhash_band_planner,
-    "url_latest_snapshot": q_url_latest_snapshot,
-    "lexical_diversity": q_lexical_diversity,
-    "host_quality_wilson": q_host_quality_wilson,
-    "crawl_delta": q_crawl_delta,
-    "token_budget_waterfill": q_token_budget_waterfill,
-    "width_fold": q_width_fold,
-    "incremental_requalify": q_incremental_requalify,
-    "containment_join": q_containment_join,
-    "ngram_novelty": q_ngram_novelty,
-}
-
-ORACLE_SQL_TEXTOPS: dict[str, str] = {
-    "nfc_normalize_audit": SQL_NFC_NORMALIZE_AUDIT,
-    "soft404_filter": SQL_SOFT404_FILTER,
-    "minhash_band_planner": SQL_MINHASH_BAND_PLANNER,
-    "url_latest_snapshot": SQL_URL_LATEST_SNAPSHOT,
-    "lexical_diversity": SQL_LEXICAL_DIVERSITY,
-    "host_quality_wilson": SQL_HOST_QUALITY_WILSON,
-    "crawl_delta": SQL_CRAWL_DELTA,
-    "token_budget_waterfill": SQL_TOKEN_BUDGET_WATERFILL,
-    "width_fold": SQL_WIDTH_FOLD,
-    "incremental_requalify": SQL_INCREMENTAL_REQUALIFY,
-    "containment_join": SQL_CONTAINMENT_JOIN,
-    "ngram_novelty": SQL_NGRAM_NOVELTY,
+GATES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "nfc_normalize_audit": (q_nfc_normalize_audit, SQL_NFC_NORMALIZE_AUDIT),
+    "soft404_filter": (q_soft404_filter, SQL_SOFT404_FILTER),
+    "minhash_band_planner": (q_minhash_band_planner, SQL_MINHASH_BAND_PLANNER),
+    "url_latest_snapshot": (q_url_latest_snapshot, SQL_URL_LATEST_SNAPSHOT),
+    "lexical_diversity": (q_lexical_diversity, SQL_LEXICAL_DIVERSITY),
+    "host_quality_wilson": (q_host_quality_wilson, SQL_HOST_QUALITY_WILSON),
+    "crawl_delta": (q_crawl_delta, SQL_CRAWL_DELTA),
+    "token_budget_waterfill": (q_token_budget_waterfill, SQL_TOKEN_BUDGET_WATERFILL),
+    "width_fold": (q_width_fold, SQL_WIDTH_FOLD),
+    "incremental_requalify": (q_incremental_requalify, SQL_INCREMENTAL_REQUALIFY),
+    "containment_join": (q_containment_join, SQL_CONTAINMENT_JOIN),
+    "ngram_novelty": (q_ngram_novelty, SQL_NGRAM_NOVELTY),
 }

@@ -430,22 +430,12 @@ FROM dup_docs d JOIN c USING (h)
 )
 
 
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "html_meta_extract": q_html_meta_extract,
-    "canonical_dedup": q_canonical_dedup,
-    "hreflang_consistency": q_hreflang_consistency,
-    "pii_pseudonymize": q_pii_pseudonymize,
-    "pii_iban": q_pii_iban,
-    "dup_rate_by_host": q_dup_rate_by_host,
-    "dedup_soft_weight": q_dedup_soft_weight,
-}
-
-ORACLE_SQL_EXT: dict[str, str] = {
-    "html_meta_extract": SQL_HTML_META_EXTRACT,
-    "canonical_dedup": SQL_CANONICAL_DEDUP,
-    "hreflang_consistency": SQL_HREFLANG_CONSISTENCY,
-    "pii_pseudonymize": SQL_PII_PSEUDONYMIZE,
-    "pii_iban": SQL_PII_IBAN,
-    "dup_rate_by_host": SQL_DUP_RATE_BY_HOST,
-    "dedup_soft_weight": SQL_DEDUP_SOFT_WEIGHT,
+GATES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "html_meta_extract": (q_html_meta_extract, SQL_HTML_META_EXTRACT),
+    "canonical_dedup": (q_canonical_dedup, SQL_CANONICAL_DEDUP),
+    "hreflang_consistency": (q_hreflang_consistency, SQL_HREFLANG_CONSISTENCY),
+    "pii_pseudonymize": (q_pii_pseudonymize, SQL_PII_PSEUDONYMIZE),
+    "pii_iban": (q_pii_iban, SQL_PII_IBAN),
+    "dup_rate_by_host": (q_dup_rate_by_host, SQL_DUP_RATE_BY_HOST),
+    "dedup_soft_weight": (q_dedup_soft_weight, SQL_DEDUP_SOFT_WEIGHT),
 }

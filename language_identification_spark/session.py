@@ -24,7 +24,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+)
 
 
 def get_spark(

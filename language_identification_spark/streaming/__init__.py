@@ -1,17 +1,11 @@
 from language_identification_spark.streaming.jobs import (
     run_stream_once,
-    streaming_dedup_events,
     streaming_docs_c4,
-    streaming_events_hourly,
     streaming_pages_filter,
-    streaming_user_totals,
 )
 
 __all__ = [
     "run_stream_once",
-    "streaming_dedup_events",
     "streaming_docs_c4",
-    "streaming_events_hourly",
     "streaming_pages_filter",
-    "streaming_user_totals",
 ]

@@ -13,22 +13,14 @@ directory at cluster scale).
 Scale notes:
 - the per-batch work is identical to the batch plan, so all batch-side sizing
   (partitioning, Arrow batch bounds, broadcast models) carries over;
-- the windowed aggregation keeps state per (window, event_type); the
-  watermark bounds that state — without it, 10^12 docs of late-data state
-  would grow forever;
-- streaming dedup (dropDuplicatesWithinWatermark) is the streaming analog of
-  the exact-dedup operator: state is bounded by the watermark horizon.
+- the stateful jobs (streaming_near_dup, streaming_bloom_dedup) carry
+  bounded per-shard state across micro-batches via applyInPandasWithState.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, payload string"
-)
 
 DOCUMENTS_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -41,33 +33,6 @@ from language_identification_spark.queries import (  # noqa: E402
     SIMHASH_BANDS,
     SIMHASH_BITS,
 )
-
-
-def streaming_events_hourly(
-    spark: SparkSession, source_dir: str, watermark: str = "1 hour"
-) -> DataFrame:
-    """Tumbling-window rollup of the events table as a stream — the streaming
-    form of queries.q_events_hourly. Watermark bounds window state; late rows
-    beyond it are dropped deterministically."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .load(source_dir)
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH").alias("hour"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
 
 
 def streaming_pages_filter(
@@ -102,68 +67,6 @@ def streaming_docs_c4(spark: SparkSession, source_dir: str) -> DataFrame:
         .load(source_dir)
     )
     return c4_line_filter(docs)
-
-
-def streaming_dedup_events(
-    spark: SparkSession, source_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
-    """Stateful streaming exact-dedup: drop re-deliveries of the same
-    event_id arriving within the watermark horizon — the streaming analog of
-    the exact-dedup operator. State is keyed by event_id and EXPIRES with the
-    watermark (dropDuplicatesWithinWatermark), so state size is bounded by
-    the horizon's arrival rate, not the stream's lifetime — the property that
-    keeps this viable on an unbounded 10^12-event stream."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .load(source_dir)
-    )
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def streaming_user_totals(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: running per-user
-    event count + value total, state carried across micro-batches.
-
-    This is the escape hatch for stateful logic the built-in windowed
-    aggregations cannot express (per-key models, custom eviction, cross-batch
-    sequences). State here is two numbers per user — at 10^12 events the
-    state store holds |users| rows, checkpointed with the stream, and each
-    micro-batch touches only the users present in that batch."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    reader = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        # bounds each micro-batch; with availableNow this splits a bounded
-        # replay into MULTIPLE batches, exercising cross-batch state
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    events = reader.load(source_dir)
-
-    out_schema = "user_id bigint, n_events bigint, total_value double"
-    state_schema = "n bigint, total double"
-
-    def update(key, pdfs, state):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
 
 
 def simhash60(text: str | None) -> int | None:
@@ -312,7 +215,7 @@ def streaming_bloom_dedup(spark: SparkSession, source_dir: str) -> DataFrame:
     maybe_dup=false is a guaranteed first occurrence, maybe_dup=true is
     "seen before" up to the classical false-positive rate.
 
-    Contrast dropDuplicatesWithinWatermark (streaming_dedup_events): that
+    Contrast dropDuplicatesWithinWatermark: that
     operator keys state by the VALUE, so state grows with distinct keys in
     the horizon; here state per shard is a fixed ceil(m/32)-word bit array
     — total state is n_shards x m bits FOREVER, the only streaming dedup
@@ -384,20 +287,13 @@ def run_stream_once(
     """Drain all currently-available input (Trigger.availableNow) into an
     in-memory sink and return the result as a DataFrame.
 
-    Output mode (overridable via ``mode``): complete for aggregations
-    (append would hold rows until the watermark closes each window, which
-    never happens on a bounded replay), update for
+    Output mode (overridable via ``mode``): update for
     applyInPandasWithState plans (their operator declares update mode and a
     start in any other mode fails), append for stateless plans."""
     spark = df.sparkSession
     if mode is None:
         plan = df._jdf.queryExecution().analyzed().toString()
-        if "FlatMapGroupsInPandasWithState" in plan:
-            mode = "update"
-        elif "Aggregate" in plan:
-            mode = "complete"
-        else:
-            mode = "append"
+        mode = "update" if "FlatMapGroupsInPandasWithState" in plan else "append"
     q = (
         df.writeStream.format("memory")
         .queryName(query_name)

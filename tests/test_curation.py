@@ -1,6 +1,8 @@
 """corpus_curation composition: stage flags compose without drift."""
 
-from language_identification_spark.queries import QUERIES
+from language_identification_spark.registry import queries
+
+QUERIES = queries()
 
 SF = "/root/testdata/sf0.001"
 

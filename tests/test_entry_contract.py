@@ -15,6 +15,18 @@ def test_oracle_keys_subset_of_queries():
     assert no_oracle == set(), no_oracle
 
 
+def test_registry_head_is_declared_and_each_gate_declared_once():
+    """A sampled correctness run checks the first 50 registry entries, so
+    the head is a choice (registry.HEAD): the flagship pipeline first.
+    Every gate name is a key in exactly one family mapping."""
+    from language_identification_spark import registry
+
+    names = list(e.queries())
+    assert names[0] == "quality_pipeline"
+    assert names[: len(registry.HEAD)] == list(registry.HEAD)
+    assert sum(len(f) for f in registry.FAMILIES) == len(names)
+
+
 def test_entry_runs_and_schema_stable(spark):
     df = e.entry(spark)
     assert df.columns == [

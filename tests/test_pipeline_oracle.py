@@ -129,7 +129,7 @@ KN_EDGE_DOCS = [
 def test_word_kn_oracle_matches_spark_on_edge_docs(spark):
     """oracle/kn_sql.py vs the Spark-trained order-2 word-KN scorer on a
     corpus with empty/whitespace/single-word docs and a singleton language."""
-    import __spark_entry__ as entry
+    from language_identification_spark.registry import queries
     from language_identification_spark.oracle.kn_sql import SQL_WORD_KN_PPL
 
     con = duckdb.connect()
@@ -144,7 +144,7 @@ def test_word_kn_oracle_matches_spark_on_edge_docs(spark):
         spark.createDataFrame(
             KN_EDGE_DOCS, "doc_id bigint, lang string, text string"
         ).coalesce(1).write.parquet(os.path.join(d, "documents.parquet"))
-        spark_pdf = entry._q_word_kn_ppl(spark, d).toPandas()
+        spark_pdf = queries()["word_kn_ppl"](spark, d).toPandas()
 
     s_rows, o_rows = _canon_frame(spark_pdf), _canon_frame(oracle_pdf)
     assert len(s_rows) == len(KN_EDGE_DOCS)
@@ -159,7 +159,7 @@ def test_word_kn_order3_oracle_matches_spark_on_edge_docs(spark):
     backoff) vs the Spark-trained ORDER-3 word-KN scorer on the same edge
     corpus — the round-3 verdict's 'order-3 gate or written impossibility'
     item, resolved as a gate."""
-    import __spark_entry__ as entry
+    from language_identification_spark.registry import queries
     from language_identification_spark.oracle.kn_sql import (
         SQL_WORD_KN_PPL_O3,
     )
@@ -176,7 +176,7 @@ def test_word_kn_order3_oracle_matches_spark_on_edge_docs(spark):
         spark.createDataFrame(
             KN_EDGE_DOCS, "doc_id bigint, lang string, text string"
         ).coalesce(1).write.parquet(os.path.join(d, "documents.parquet"))
-        spark_pdf = entry._q_word_kn_ppl_o3(spark, d).toPandas()
+        spark_pdf = queries()["word_kn_ppl_o3"](spark, d).toPandas()
 
     s_rows, o_rows = _canon_frame(spark_pdf), _canon_frame(oracle_pdf)
     assert len(s_rows) == len(KN_EDGE_DOCS)
@@ -203,7 +203,7 @@ def test_char_kn_oracle_matches_spark_on_edge_docs(spark):
     """SQL_CHAR_KN_PPL vs the Spark-trained order-2 char-KN scorer on the
     same edge corpus (whitespace-only text scores FINITE here — chars exist
     even when words do not)."""
-    import __spark_entry__ as entry
+    from language_identification_spark.registry import queries
     from language_identification_spark.oracle.kn_sql import SQL_CHAR_KN_PPL
 
     con = duckdb.connect()
@@ -218,7 +218,7 @@ def test_char_kn_oracle_matches_spark_on_edge_docs(spark):
         spark.createDataFrame(
             KN_EDGE_DOCS, "doc_id bigint, lang string, text string"
         ).coalesce(1).write.parquet(os.path.join(d, "documents.parquet"))
-        spark_pdf = entry._q_char_kn_ppl(spark, d).toPandas()
+        spark_pdf = queries()["char_kn_ppl"](spark, d).toPandas()
 
     s_rows, o_rows = _canon_frame(spark_pdf), _canon_frame(oracle_pdf)
     assert len(s_rows) == len(KN_EDGE_DOCS)
@@ -328,7 +328,7 @@ def test_kn_oracles_match_spark_on_random_corpus(spark):
     import os
     import tempfile
 
-    import __spark_entry__ as entry
+    from language_identification_spark.registry import queries
     from language_identification_spark.oracle.kn_sql import (
         SQL_CHAR_KN_PPL,
         SQL_WORD_KN_PPL,
@@ -345,8 +345,8 @@ def test_kn_oracles_match_spark_on_random_corpus(spark):
             rows, "doc_id bigint, lang string, text string"
         ).coalesce(1).write.parquet(os.path.join(d, "documents.parquet"))
         for sql, q in [
-            (SQL_WORD_KN_PPL, entry._q_word_kn_ppl),
-            (SQL_CHAR_KN_PPL, entry._q_char_kn_ppl),
+            (SQL_WORD_KN_PPL, queries()["word_kn_ppl"]),
+            (SQL_CHAR_KN_PPL, queries()["char_kn_ppl"]),
         ]:
             oracle_pdf = con.execute(sql).df()
             spark_pdf = q(spark, d).toPandas()

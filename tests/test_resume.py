@@ -6,6 +6,7 @@ stand-in for Iceberg snapshot-checkpoint resume, SURVEY.md §4.2.4).
 """
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,6 +75,18 @@ def test_crash_resume_equals_single_run(spark, tmp_path, model):
     # run 3: fully-complete manifest is a no-op
     m3 = run_resumable(spark, pages, model, out, buckets=BUCKETS)
     assert len(m3["run_history"]) == len(m2["run_history"])
+
+
+def test_corrupt_manifest_raises_before_any_write(spark, tmp_path, model):
+    """A manifest that does not parse is outside damage (the writer is
+    atomic): the run must refuse it, not treat it as a fresh start and
+    recompute every bucket."""
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "_progress.json").write_text('{"buckets_done": [0, 1')
+    with pytest.raises(ValueError, match="_progress.json"):
+        run_resumable(spark, pages_df(spark, 8), model, str(out), buckets=BUCKETS)
+    assert not [d for d in os.listdir(out) if d.startswith("bucket=")]
 
 
 def test_manifest_lineage_counters(spark, tmp_path, model):

@@ -11,7 +11,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from language_identification_spark.queries import ORACLE_SQL, QUERIES
+from language_identification_spark import queries
 
 GATES = [
     "bm25_topk",
@@ -132,13 +132,14 @@ def test_hostile_parity(spark, name):
         " text VARCHAR, n_chars BIGINT)"
     )
     con.executemany("INSERT INTO documents VALUES (?, ?, ?, ?, ?)", rows)
-    oracle_pdf = con.execute(ORACLE_SQL[name]).df()
+    builder, sql = queries.GATES[name]
+    oracle_pdf = con.execute(sql).df()
 
     with tempfile.TemporaryDirectory() as d:
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
             os.path.join(d, "documents.parquet")
         )
-        spark_pdf = QUERIES[name](spark, d).toPandas()
+        spark_pdf = builder(spark, d).toPandas()
 
     def canon(pdf: pd.DataFrame) -> list[tuple]:
         cols = sorted(pdf.columns)

@@ -83,7 +83,9 @@ def test_semdedup_finds_injected_near_copies(spark):
     cell; near-orthogonal originals must never pair. One copy may straddle
     a cluster boundary (the documented SemDeDup recall trade), so >= 8 of
     10 injected pairs must surface."""
-    from language_identification_spark.queries import QUERIES
+    from language_identification_spark.registry import queries
+
+    QUERIES = queries()
 
     rows = QUERIES["semdedup"](spark, "/root/testdata/sf0.01").collect()
     assert all(r.cos >= 0.95 for r in rows)
@@ -98,7 +100,9 @@ def test_semdedup_corpus_never_shuffles_onto_centroid_key(spark):
     """Assignment must be broadcast-centroids + max_by partial agg (the
     ivf_topk shape) — no exchange keyed on cid; the only algorithmic
     exchanges are the vec_id assignment agg and the cell self-join."""
-    from language_identification_spark.queries import QUERIES
+    from language_identification_spark.registry import queries
+
+    QUERIES = queries()
 
     plan = (
         QUERIES["semdedup"](spark, "/root/testdata/sf0.01")

@@ -15,8 +15,6 @@ from language_identification_spark.sources import (
 )
 from language_identification_spark.streaming import (
     run_stream_once,
-    streaming_dedup_events,
-    streaming_events_hourly,
     streaming_pages_filter,
 )
 
@@ -26,23 +24,6 @@ SF = "/root/testdata/sf0.001"
 # ---------------------------------------------------------------------------
 # streaming
 # ---------------------------------------------------------------------------
-
-
-def test_streaming_events_hourly_matches_batch(spark, tmp_path):
-    """The streamed tumbling-window rollup over a bounded replay must equal
-    the batch groupBy on the same files (stream/batch parity)."""
-    src = str(tmp_path / "events_src")  # file stream sources take a DIRECTORY
-    spark.read.parquet(f"{SF}/events.parquet").write.parquet(src)
-    stream = streaming_events_hourly(spark, src)
-    got = run_stream_once(stream, str(tmp_path / "ckpt"), "ev_hourly")
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(F.date_format("ts", "yyyy-MM-dd HH").alias("hour"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
-    )
-    g = {(r["hour"], r["event_type"]): (r["n"], r["total_value"]) for r in got.collect()}
-    b = {(r["hour"], r["event_type"]): (r["n"], r["total_value"]) for r in batch.collect()}
-    assert g == b and len(g) > 0
 
 
 def test_streaming_pipeline_matches_batch(spark, tmp_path):
@@ -64,66 +45,6 @@ def test_streaming_pipeline_matches_batch(spark, tmp_path):
     g = {r["url"]: (r["keep"], tuple(r["drop_reasons"])) for r in got.collect()}
     b = {r["url"]: (r["keep"], tuple(r["drop_reasons"])) for r in batch.collect()}
     assert g == b and len(g) == 120
-
-
-def test_streaming_custom_stateful_operator(spark, tmp_path):
-    """applyInPandasWithState running totals: after draining a TWO-batch
-    replay (two source files, maxFilesPerTrigger=1 via availableNow
-    batching), the LAST emitted row per user equals the batch aggregate —
-    state genuinely carries across micro-batches."""
-    import pyspark.sql.functions as SF
-    from language_identification_spark.streaming import streaming_user_totals
-
-    src = str(tmp_path / "ev_state_src")
-    ev = spark.read.parquet(f"{SF_DIR_EVENTS}")
-    half = ev.limit(400)
-    rest = ev.subtract(half)
-    half.write.parquet(src)
-    rest.write.mode("append").parquet(src)
-
-    stream = streaming_user_totals(spark, src, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("user_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got_df = spark.table("user_totals")
-    # last update per user = the row with the max n_events for that user
-    latest = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in got_df.orderBy("user_id", "n_events").collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in ev.groupBy("user_id")
-        .agg(SF.count("*").alias("n"), SF.sum("value").alias("t"))
-        .collect()
-    }
-    assert set(latest) == set(batch)
-    for uid, (n, t) in batch.items():
-        assert latest[uid][0] == n, uid
-        assert abs(latest[uid][1] - t) < 1e-6, uid
-
-
-SF_DIR_EVENTS = f"{SF}/events.parquet"
-
-
-def test_streaming_stateful_dedup(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: duplicated event deliveries collapse to
-    one row each; output matches batch dropDuplicates on event_id."""
-    src = str(tmp_path / "dup_src")
-    ev = spark.read.parquet(f"{SF}/events.parquet").limit(500)
-    ev.write.parquet(src)  # first delivery
-    ev.write.mode("append").parquet(src)  # duplicate delivery of every event
-    stream = streaming_dedup_events(spark, src)
-    got = run_stream_once(stream, str(tmp_path / "ckpt3"), "ev_dedup")
-    n_unique = ev.select("event_id").distinct().count()
-    assert got.count() == n_unique
-    assert got.select("event_id").distinct().count() == n_unique
 
 
 def test_streaming_c4_matches_batch(spark, tmp_path):

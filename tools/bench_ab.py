@@ -35,6 +35,9 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from language_identification_spark.session import DEFAULT_CPUS  # noqa: E402
 
 # mixed subset: Python-compute-bound (pipeline, kn), JVM-string/shuffle-
 # heavy (langid_eval, skew_join, ngram_counts) — the two classes round 4
@@ -101,11 +104,7 @@ def main() -> int:
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
-    ap.add_argument(
-        "--cpus",
-        type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    )
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     ap.add_argument("--queries", default=",".join(DEFAULT_QUERIES))
     ap.add_argument("--tolerance", type=float, default=0.15)
     ap.add_argument("--out", default=None)

@@ -25,10 +25,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 def canon(value) -> str:

@@ -18,15 +18,6 @@ is the pipeline's own crc32(url) uniform re-spread (the host-skew salting of
 SURVEY.md 4.2) BELOW the Python stage — everything above it is narrow; rule
 evaluation and the scrub regex chain run as native projections above the
 Python stage (whole-stage codegen).""",
-    "pricing_summary": """\
-What to look for: PushedFilters carries the l_shipdate predicate into the
-parquet scan; ReadSchema holds only the 7 referenced columns of the 16;
-partial HashAggregate before the Exchange (map-side combine) and the final
-HashAggregate after — the one shuffle keyed on the group-by columns.""",
-    "order_revenue_topk": """\
-What to look for: BroadcastHashJoin for the customer and nation dimensions
-(no SortMergeJoin — the fact side never shuffles for dimension joins), the
-revenue aggregation's single Exchange, and the rank window on top.""",
     "minhash_signatures": """\
 What to look for: Generate (the shingle explode) ABOVE the round-robin
 Exchange — the md5-heavy map stage runs at cluster width even when the scan
@@ -99,8 +90,6 @@ def main() -> None:
     ]
     for name in (
         "quality_pipeline",
-        "pricing_summary",
-        "order_revenue_topk",
         "minhash_signatures",
         "ivf_topk",
         "embedding_near_dup",
