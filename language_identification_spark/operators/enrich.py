@@ -12,9 +12,14 @@ calling the SAME oracle functions row-wise (oracle/quality.py:doc_stats,
 oracle/langid.py:NgramNBModel.detect, oracle/kneser_ney.py:KNModel.perplexity),
 so fusing cannot change results — parity stays byte-identical (tests).
 
-Models ride a single broadcast; the NB model's dense numpy form and the
-reference-style lru caches build once per Python worker and persist across
-Arrow batches (SURVEY.md §4.1).
+Models ride a single broadcast; the NB model's dense numpy form builds once
+per Python worker and persists across Arrow batches (SURVEY.md §4.1), and so
+do the two scoring memos: ``gram -> log2 p`` on each KN model
+(oracle/kneser_ney.py) and ``token -> (row ids, hash)`` on the numpy fastText
+model (operators/fasttext_np.py, loaded per worker and never shipped). Each
+is cleared at a fixed entry count (``LOGPROB_MEMO_MAX``, ``TOKEN_MEMO_MAX``)
+and never pickled, so the (NB, KN) broadcast carries the models' fields only,
+even after driver-side scoring.
 """
 
 from __future__ import annotations

@@ -52,6 +52,11 @@ EOS = "</s>"
 BOW, EOW = "<", ">"
 _WHITESPACE = " \t\n\v\f\r\0"
 
+# per-model token memo of NumpyFastText._token: entry cap, and the longest
+# token it keeps
+TOKEN_MEMO_MAX = 1 << 14
+TOKEN_MEMO_MAX_CHARS = 32
+
 
 def ft_hash(s: str | bytes) -> int:
     """fastText's FNV-1a 32-bit over UTF-8 bytes with the C++ quirk that
@@ -178,12 +183,16 @@ class NumpyFastText:
             )
         if input_matrix.shape[0] < nwords:
             raise ValueError("input matrix smaller than vocabulary")
-        # per-word subword lists (Dictionary::initNgrams semantics: the word
-        # id itself + its char ngrams; EOS gets no char ngrams). Computed
-        # LAZILY with a cache — eager precompute over a lid.176-sized vocab
-        # (~10^5 words x ~15 pure-Python FNV ngrams) would cost tens of
-        # seconds of per-executor startup for rows most batches never touch.
-        self._subword_cache: dict[int, list[int]] = {}
+        self._memo: dict[str, tuple[tuple[int, ...], int]] = {}
+
+    def __getstate__(self) -> dict:
+        state = self.__dict__.copy()
+        del state["_memo"]  # per-process scratch, never shipped
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._memo = {}
 
     def _bucket_rows(self, hs: list[int]) -> list[int]:
         """Bucket-relative ngram ids -> input-matrix row ids, applying the
@@ -196,20 +205,33 @@ class NumpyFastText:
         idx = self.pruneidx
         return [nwords + idx[h] for h in hs if h in idx]
 
-    def _word_subwords(self, wid: int) -> list[int]:
-        ids = self._subword_cache.get(wid)
-        if ids is None:
-            a = self.args
-            w = self.words[wid]
-            ids = [wid]
-            if a.maxn > 0 and w != EOS:
-                ids += self._bucket_rows(
-                    compute_subwords(w, a.minn, a.maxn, a.bucket)
-                )
-            self._subword_cache[wid] = ids
-        return ids
-
     # -- tokenization / id mapping ------------------------------------------
+
+    def _token(self, token: str) -> tuple[tuple[int, ...], int]:
+        """(input rows, token hash) of one word-type token: the dictionary
+        id when in vocabulary (``Dictionary::initNgrams``), then the char
+        ngrams of every token but EOS. Memoized per model; the memo is
+        cleared at ``TOKEN_MEMO_MAX`` entries and skips tokens longer than
+        ``TOKEN_MEMO_MAX_CHARS``, which rarely repeat. Worst case per Python
+        worker, measured with lid.176's minn=2/maxn=4: ~4.2 KB per entry (a
+        32-char UCS-4 token and its ~100 row ids), ~70 MB for a full memo;
+        an 8-letter word takes ~1.1 KB."""
+        hit = self._memo.get(token)
+        if hit is not None:
+            return hit
+        a = self.args
+        wid = self.word_id.get(token, -1)
+        ids = [wid] if wid >= 0 else []
+        if a.maxn > 0 and token != EOS:
+            ids += self._bucket_rows(
+                compute_subwords(token, a.minn, a.maxn, a.bucket)
+            )
+        hit = (tuple(ids), ft_hash(token))
+        if len(token) <= TOKEN_MEMO_MAX_CHARS:
+            if len(self._memo) >= TOKEN_MEMO_MAX:
+                self._memo.clear()
+            self._memo[token] = hit
+        return hit
 
     def line_ids(self, text: str) -> list[int]:
         """Input-matrix row ids for one line: per-token dictionary ids +
@@ -223,21 +245,11 @@ class NumpyFastText:
         for token in _tokenize(text) + [EOS]:
             if token.startswith("__label__"):
                 continue  # label-type tokens never contribute input ids
-            wid = self.word_id.get(token, -1)
-            if wid >= 0:
-                if a.maxn <= 0:
-                    ids.append(wid)
-                else:
-                    ids.extend(self._word_subwords(wid))
-            elif token != EOS and a.maxn > 0:
-                ids.extend(
-                    self._bucket_rows(
-                        compute_subwords(token, a.minn, a.maxn, a.bucket)
-                    )
-                )
+            rows, h = self._token(token)
+            ids.extend(rows)
             # the native getLine pushes the token hash for EVERY word-type
             # token — in-vocab, OOV, and EOS alike
-            hashes.append(ft_hash(token))
+            hashes.append(h)
             if token == EOS:
                 # Dictionary::getLine breaks at the first EOS token — a
                 # literal "</s>" in web text ends the line for scoring;

@@ -53,10 +53,7 @@ def _top_grams_udf(order: int):
             if text is None:
                 return []
             chars = padded_chars(text, order)
-            return [
-                "".join(chars[i : i + order])
-                for i in range(len(chars) - order + 1)
-            ]
+            return [chars[i : i + order] for i in range(len(chars) - order + 1)]
 
         for series in batches:
             yield series.map(grams)

@@ -21,6 +21,15 @@ dictionary_langid/datatypes.py:337-341.
 
 The model is a plain picklable dataclass of dicts (a char-trigram LM is a few
 hundred KB), safe to ``sc.broadcast`` — never a native object (SURVEY.md §7.3).
+
+Scoring: ``prob`` is the definition — a recursive interpolation costing a
+few dict lookups per order. ``logprob2`` memoizes ``gram -> log2 prob`` on
+the model instance, so a gram repeated anywhere in a worker's documents
+(most are) costs one dict hit. The memo is cleared whenever it reaches
+``LOGPROB_MEMO_MAX`` entries and is never pickled, so a broadcast carries the
+same bytes however warm the driver's copy is. Worst case per Python worker:
+a full memo is ~150 B per entry (a gram of up to 5 UCS-4 chars, its float,
+its dict slot), ~2.5 MB per model, ~430 MB with 176 language models loaded.
 """
 
 from __future__ import annotations
@@ -33,10 +42,13 @@ from dataclasses import dataclass, field
 BOS = "\x02"  # padding chars, like the sentence padding the reference applies
 EOS = "\x03"  # before Counter(ngrams) (modified_kneser_ney.py:158-201)
 
+# entries per model before the scoring memo is cleared (module docstring)
+LOGPROB_MEMO_MAX = 1 << 14
 
-def padded_chars(text: str, order: int) -> list[str]:
-    """casefolded char sequence with (order-1) BOS pads and one EOS."""
-    return [BOS] * (order - 1) + list(text.casefold()) + [EOS]
+
+def padded_chars(text: str, order: int) -> str:
+    """casefolded text with (order-1) BOS pads and one EOS."""
+    return BOS * (order - 1) + text.casefold() + EOS
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +70,7 @@ def raw_ngram_counts(
     for text in corpus:
         chars = padded_chars(text, order)
         for i in range(len(chars) - order + 1):
-            top["".join(chars[i : i + order])] += 1
+            top[chars[i : i + order]] += 1
     counts: dict[int, dict[str, int]] = {order: dict(top)}
     for k in range(order - 1, 0, -1):
         cont: Counter[str] = Counter()
@@ -121,16 +133,38 @@ class KNModel:
         )
 
     # -- document scoring -------------------------------------------------
+    def __post_init__(self) -> None:
+        self._memo: dict[str, float] = {}
+
+    def __getstate__(self) -> dict:
+        # the memo is per-process scratch: a broadcast or a saved model
+        # carries exactly the fields, however warm the driver's copy is
+        state = self.__dict__.copy()
+        del state["_memo"]
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._memo = {}
+
     def logprob2(self, text: str) -> tuple[float, int]:
         """(sum log2 p, n_predictions) over the padded char stream
-        (score_sent shape, modified_kneser_ney.py:744-758)."""
-        chars = padded_chars(text, self.order)
+        (score_sent shape, modified_kneser_ney.py:744-758). Each gram's
+        ``log2 prob`` is memoized (module docstring, "Scoring"); the sum
+        runs left to right either way, so the result is bit-identical."""
+        order = self.order
+        padded = padded_chars(text, order)
+        n = len(padded) - order + 1
+        memo = self._memo
         total = 0.0
-        n = 0
-        for i in range(self.order - 1, len(chars)):
-            ctx = "".join(chars[i - self.order + 1 : i])
-            total += math.log2(self.prob(ctx, chars[i]))
-            n += 1
+        for i in range(n):
+            gram = padded[i : i + order]
+            lp = memo.get(gram)
+            if lp is None:
+                if len(memo) >= LOGPROB_MEMO_MAX:
+                    memo.clear()
+                lp = memo[gram] = math.log2(self.prob(gram[:-1], gram[-1]))
+            total += lp
         return total, n
 
     def perplexity(self, text: str | None) -> float:

@@ -1,34 +1,40 @@
 """The quality-filter pipeline: pages -> results(+metrics), resumable.
 
-Stage graph (all narrow until the metrics aggregation):
+Stage graph of one ``run_resumable`` pass (the CLI and the benchmark path):
 
     scan pages (column-pruned: url, warc_ts, html)
-      -> repartition(hash(url))            # uniform key defeats host skew
       -> extract_text_udf                  # Arrow batch, Python
       -> enrich_udf                        # ONE Arrow batch pass, Python:
                                            # stats + langid + perplexity
       -> rule exprs + scrub_expr           # JVM, whole-stage codegen
-      -> write results partitioned by bucket
-    metrics = results.groupBy(rule).count()  # the only shuffle besides repartition
+      -> bucket = pmod(crc32(url), B)
+      -> write pending buckets, partitioned by bucket   # job 1, no shuffle
+    lineage: two more jobs re-read the committed buckets (one groupBy
+      shuffle each): rows per bucket, drops per (bucket, rule)
+      -> manifest (atomic rename), then a small _lineage parquet write
+
+``metrics_plan`` / ``langdist_plan`` are separate aggregation jobs over the
+results (one shuffle each); the CLI runs them after the pass.
 
 Scale design (north_star, SURVEY.md §4.2):
 - **Skew**: Common-Crawl pages cluster by host; a host-partitioned upstream
-  layout would starve most tasks and melt a few. ``repartition(P, hash(url))``
-  re-spreads uniformly BEFORE the compute-heavy UDF stages — AQE fixes shuffle
-  skew but not UDF-compute skew, so this is explicit.
-- **Partition sizing**: P defaults to input-size/128MiB-ish via
-  ``spark.sql.files.maxPartitionBytes`` at scan; callers override ``buckets``
-  for the bucketed resumable write.
-- **Resume**: the bucketed variant writes one bucket (deterministic
-  ``pmod(hash(url), buckets)``) at a time with an atomic _SUCCESS-style
-  manifest entry; re-running skips completed buckets (idempotent overwrite per
-  bucket — the parquet stand-in for Iceberg's overwrite-by-partition /
-  snapshot checkpoints described in SURVEY.md §4.2.4; swap the writer to
+  layout would starve most tasks and melt a few. ``quality_filter_plan``
+  takes ``repartition_to=P`` to re-spread by ``crc32(url)`` BEFORE the
+  compute-heavy UDF stages (AQE fixes shuffle skew but not UDF-compute
+  skew). ``run_resumable`` does not pass it: the pass runs on the scan's
+  own input splits.
+- **Partition sizing**: the scan's split size comes from
+  ``spark.sql.files.maxPartitionBytes``; ``buckets`` sets the output layout.
+- **Resume**: every pending bucket (deterministic ``pmod(crc32(url),
+  buckets)``) is written in ONE dynamic-overwrite pass, then recorded in an
+  atomically replaced manifest; re-running skips completed buckets (the
+  parquet stand-in for Iceberg's overwrite-by-partition / snapshot
+  checkpoints described in SURVEY.md §4.2.4; swap the writer to
   ``format("iceberg")`` + MERGE on a real cluster).
 
 Output schema (SURVEY.md §7.0):
     results(url, warc_ts, extracted_text, scrubbed_text, lang_pred, lang_conf,
-            keep, drop_reasons array<string>)
+            ppl, keep, drop_reasons array<string>)
     metrics(rule string, n bigint)  + langdist(lang_pred, n)
 """
 

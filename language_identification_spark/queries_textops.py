@@ -156,8 +156,10 @@ def q_url_latest_snapshot(spark, sf_dir):
     both are synthesized deterministically: url collides for doc_ids equal
     mod 200 (multi-snapshot groups at every SF), pseudo-random capture
     hour via a Knuth-multiplicative hash mod 8191 (ties possible ->
-    min-doc_id tie-break is load-bearing). ONE short-key exchange,
-    map-side-combinable max-struct election (operators/urlnorm.py)."""
+    min-doc_id tie-break is load-bearing). ``doc_id`` is reduced mod 8191
+    before the multiply, so no bigint id overflows it in either engine.
+    ONE short-key exchange, map-side-combinable max-struct election
+    (operators/urlnorm.py)."""
     did = F.col("doc_id")
     snaps = _spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
@@ -167,7 +169,7 @@ def q_url_latest_snapshot(spark, sf_dir):
             F.lit(".example.com/p"),
             (did % 200).cast("string"),
         ).alias("url"),
-        ((did * 2654435761) % 8191).cast("bigint").alias("snap_h"),
+        (((did % 8191) * 2654435761) % 8191).cast("bigint").alias("snap_h"),
     )
     return latest_snapshot(snaps, "url", "snap_h", "doc_id")
 
@@ -177,7 +179,7 @@ WITH snaps AS (
   SELECT doc_id,
          'site' || (doc_id % 25) || '.example.com/p' || (doc_id % 200)
            AS url,
-         CAST((doc_id * 2654435761) % 8191 AS BIGINT) AS snap_h
+         CAST(((doc_id % 8191) * 2654435761) % 8191 AS BIGINT) AS snap_h
   FROM documents
 ),
 ranked AS (

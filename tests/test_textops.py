@@ -125,6 +125,41 @@ def test_latest_snapshot_keeps_max_ts_min_id_tie(spark):
     assert out["u3"].n_snapshots == 1
 
 
+def test_url_latest_snapshot_gate_with_ids_past_2_32(spark, tmp_path):
+    """The gate's capture-hour hash reduces doc_id mod 8191 before the
+    Knuth multiply, so ids whose raw product passes 2^63 give the same rows
+    in Spark and in the DuckDB oracle. 96, 2^32 and 2^32+200 share a url."""
+    import duckdb
+
+    from language_identification_spark.queries_textops import (
+        SQL_URL_LATEST_SNAPSHOT,
+        q_url_latest_snapshot,
+    )
+
+    ids = [0, 1, 96, 200, 8191, 2**32, 2**32 + 200, 2**40 + 7, 2**62 + 400, 2**63 - 1]
+    rows = [(i, "t") for i in ids]
+    spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = sorted(
+        tuple(int(v) if k != "url" else v for k, v in r.asDict().items())
+        for r in q_url_latest_snapshot(spark, str(tmp_path))
+        .select("url", "doc_id", "snap_h", "n_snapshots")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(
+        (u, int(d), int(h), int(n))
+        for u, d, h, n in con.execute(
+            f"SELECT url, doc_id, snap_h, n_snapshots FROM ({SQL_URL_LATEST_SNAPSHOT})"
+        ).fetchall()
+    )
+    assert got == want
+    assert [r for r in got if r[0] == "site21.example.com/p96"][0][3] == 3
+
+
 def test_wilson_bounds_match_reference_formula(spark):
     import math
 
